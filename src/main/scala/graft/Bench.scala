@@ -38,6 +38,9 @@ import org.apache.spark.sql.SparkSession
   *     "flag_resamples".
   *   - a failed query records -1 AND lands in an explicit "errors" list
   *     instead of silently passing with a bogus timing.
+  *   - "codegen_compiles" carries, per query, the generated classes each
+  *     timed pass compiled for it: a warm pass that compiles again means
+  *     the codegen cache is evicting ([[GraftExtensions]]).
   *   - a second "graph_served" column (r11 verdict #2) re-times the
   *     index-served families with their persisted bucketed tables
   *     serving — the 100 TB production shape — next to the cold
@@ -361,6 +364,19 @@ object Bench {
         }.mkString("{", ",", "}")
     }
 
+  /** Generated classes Spark has compiled in this JVM so far. */
+  private[graft] def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
+  /** The "codegen_compiles" record field: query -> the compile count of
+    * its call in each timed pass, in pass order.
+    */
+  private[graft] def codegenJson(passes: Seq[Map[String, Long]]): String =
+    passes.flatMap(_.keys).distinct.sorted.map { n =>
+      "\"" + n + "\":" + passes.flatMap(_.get(n)).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - t0) / 1e9
@@ -425,16 +441,24 @@ object Bench {
       sinceBoundary += 1
       if (sinceBoundary >= 25) { sinceBoundary = 0; boundary() }
     }
-    def timedPass(skipRetired: Boolean): Map[String, Double] =
-      SparkEntry.queries.collect {
+    val compilesPerPass =
+      scala.collection.mutable.ArrayBuffer.empty[Map[String, Long]]
+    def timedPass(skipRetired: Boolean): Map[String, Double] = {
+      val compiles = Map.newBuilder[String, Long]
+      val times = SparkEntry.queries.collect {
         case (name, fn) if !(skipRetired && Retired.contains(name)) =>
+          val c = compileCount()
           val t = System.nanoTime()
           val ok =
             try { runNoop(fn(spark, sfDir)); true }
             catch { case _: Throwable => errors ::= name; false }
+          compiles += name -> (compileCount() - c)
           midPassBoundary()
           name -> (if (ok) (System.nanoTime() - t) / 1e9 else -1.0)
       }
+      compilesPerPass += compiles.result()
+      times
+    }
     // ---- timed passes under the budget ladder -----------------------
     // pass 1 always runs (and is the only pass timing the retired
     // block); passes 2 and 3 run when the ladder says they fit — pass 3
@@ -549,7 +573,7 @@ object Bench {
         "\"" + n + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
       }.mkString("{", ",", "}")
       val clearJson = clearedJson(flaggedAt, results, prior)
-      val line = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"graph_persist_sec":$persistSec,"graph_served":$servedJson,"graph_served_samples":$servedSamplesJson,"errors":$errJson,"retired":$retiredJson,"regressions":$regJson,"regressions_under_load":$regLoadJson,"flag_resamples":$resampJson,"regressions_cleared":$clearJson,"load":$loadJson,"cpu":$cpuJson,"budget":$budgetJson,"sf":"$sfDir"}"""
+      val line = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"graph_persist_sec":$persistSec,"graph_served":$servedJson,"graph_served_samples":$servedSamplesJson,"errors":$errJson,"codegen_compiles":${codegenJson(compilesPerPass.toSeq)},"retired":$retiredJson,"regressions":$regJson,"regressions_under_load":$regLoadJson,"flag_resamples":$resampJson,"regressions_cleared":$clearJson,"load":$loadJson,"cpu":$cpuJson,"budget":$budgetJson,"sf":"$sfDir"}"""
       // the summary carries AGGREGATES of the served column + witnesses
       // (full detail lives in the file record) — it must fit the tail
       val summary = f"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"n_queries":${results.size},"graph_persist_sec":$persistSec,"graph_served_total":$servedTotal%.1f,"graph_served_n":${servedMap.size},"errors":$errJson,"regressions":$regJson,"regressions_under_load":$regLoadJson,"regressions_cleared":$clearJson,"load":$loadAgg,"cpu":$cpuAgg,"budget":$budgetJson,"full_record":"BENCH_SELF.json","sf":"$sfDir"}"""

@@ -411,22 +411,15 @@ object Multimodal {
   // cold-build memo (r18, the coAdj/lpaStates lifecycle): mm5/mm6/mm7
   // each re-ran the corpus decode+phash kernel per invocation when no
   // table serves; deterministic per media content, served path first
-  private val phashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
+  private val phashMemo = new graft.lake.SessionMemo.Checkpointed
   private[graft] def corpusPhashes(s: SparkSession,
       d: String): (DataFrame, Boolean) = {
     import s.implicits._
     graft.lake.IndexTables.serve(s, PhashPrefix, phPath(d)) match {
       case Some(t) => (t, true)
       case None =>
-        phashCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        val sig = graft.lake.CorpusIndexCache.signature(d)
-        (phashCache.compute((s, d), (_, cur) =>
-          if (cur != null && cur._1 == sig) cur
-          else (sig, perceptualHashes(mediaTable(s, d)
-              .select(col("media_id"), col("payload")).as[Media])
-            .localCheckpoint()))._2,
-          false)
+        (phashMemo(s, d)(perceptualHashes(mediaTable(s, d)
+            .select(col("media_id"), col("payload")).as[Media])), false)
     }
   }
 

@@ -601,21 +601,30 @@ object CoreQueries {
 
   /** §2.5 extension: exact percentiles per group. Spark `percentile`
     * and DuckDB `quantile_cont` share the linear-interpolation formula
-    * (lo + (hi-lo)·frac over the sorted group), so exact doubles match.
-    * Note this is the EXACT (sort-based) form — at 100 TB you'd reach
+    * (lo + (hi-lo)·frac over the sorted group). Prices are cents, and
+    * an interpolated quartile can land on a half cent, where the two
+    * engines' `round(_, 2)` of a double disagree (status F's median
+    * 249079.685). So the quantile runs over integer cents, where
+    * frac ∈ {0, ¼, ½, ¾} keeps every interpolation exact in a double,
+    * and rounds half up explicitly (floor(x + 0.5)) before the one
+    * division back to dollars, which is the same IEEE operation in
+    * both engines. Note this is the EXACT (sort-based) form — at 100 TB you'd reach
     * for `approx_percentile` (t-digest, partial-aggregable); its result
     * depends on merge order, so it can't be oracle-checked (see
     * `a6_approx_distinct`'s spec-based tolerance check for that
     * pattern).
     */
-  def a5Percentile(s: SparkSession, d: String): DataFrame =
+  def a5Percentile(s: SparkSession, d: String): DataFrame = {
+    def quantile(p: String) = expr("floor(percentile(cents, " + p +
+      ") + CAST(0.5 AS DOUBLE)) / CAST(100 AS DOUBLE)")
     orders(s, d)
+      .select(col("o_orderstatus"),
+        round(col("o_totalprice") * 100).cast("long").as("cents"))
       .groupBy("o_orderstatus")
-      .agg(
-        round(expr("percentile(o_totalprice, 0.25)"), 2).as("q25"),
-        round(expr("percentile(o_totalprice, 0.5)"), 2).as("q50"),
-        round(expr("percentile(o_totalprice, 0.75)"), 2).as("q75"))
+      .agg(quantile("0.25").as("q25"), quantile("0.5").as("q50"),
+        quantile("0.75").as("q75"))
       .orderBy("o_orderstatus")
+  }
 
   /** §2.5 extension: approx_count_distinct (HLL++ sketch) — the
     * partial-aggregable cardinality sketch a 100 TB pipeline uses
@@ -1213,11 +1222,16 @@ object CoreQueries {
         |FROM orders o JOIN q USING (o_orderstatus)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "a5_percentile" ->
-      """SELECT o_orderstatus,
-        |  round(quantile_cont(o_totalprice, 0.25), 2) AS q25,
-        |  round(quantile_cont(o_totalprice, 0.5), 2) AS q50,
-        |  round(quantile_cont(o_totalprice, 0.75), 2) AS q75
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
+      """WITH c AS (SELECT o_orderstatus,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
+        |SELECT o_orderstatus,
+        |  floor(quantile_cont(cents, 0.25) + CAST(0.5 AS DOUBLE))
+        |    / CAST(100 AS DOUBLE) AS q25,
+        |  floor(quantile_cont(cents, 0.5) + CAST(0.5 AS DOUBLE))
+        |    / CAST(100 AS DOUBLE) AS q50,
+        |  floor(quantile_cont(cents, 0.75) + CAST(0.5 AS DOUBLE))
+        |    / CAST(100 AS DOUBLE) AS q75
+        |FROM c GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
     "a4_rollup" ->
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,

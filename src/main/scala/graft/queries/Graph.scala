@@ -141,21 +141,14 @@ object Graph {
     */
   // cold-build memo, the [[coAdj]]/[[lpaStates]] lifecycle: g1 rebuilt
   // the identical fact-join edge relation per invocation (r18)
-  private val g1EdgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
+  private val g1EdgeMemo = new graft.lake.SessionMemo.Checkpointed
   private def g1Edges(s: SparkSession, d: String): DataFrame =
     graft.lake.IndexTables.serve(s, G1Prefix, d)
       .map { t =>
         val edges = t.groupBy("src", "dst").agg(sum("w").as("w"))
         edges.join(edges.groupBy("src").agg(sum("w").as("wout")), "src")
       }
-      .getOrElse {
-        g1EdgeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        val sig = graft.lake.CorpusIndexCache.signature(d)
-        g1EdgeCache.compute((s, d), (_, cur) =>
-          if (cur != null && cur._1 == sig) cur
-          else (sig, edgesWithOut(s, d).localCheckpoint()))._2
-      }
+      .getOrElse(g1EdgeMemo(s, d)(edgesWithOut(s, d)))
 
   /** The plain weighted edge relation of g1's bipartite graph —
     * (src, dst, w) both directions, NO out-weight — from explicit fact
@@ -238,8 +231,7 @@ object Graph {
     * the SERVED path is consulted first so a freshly persisted or
     * appended table is never masked. Stopped sessions sweep lazily.
     */
-  private val adjCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
+  private val adjMemo = new graft.lake.SessionMemo.Checkpointed
   private[graft] def coAdj(s: SparkSession, d: String): DataFrame =
     graft.lake.IndexTables.serve(s, CoAdjPrefix, d)
       // merge-on-read: incremental appends ([[appendAdjacencyIncrement]])
@@ -259,13 +251,7 @@ object Graph {
       // an identity outside retraction.
       .map(_.groupBy("u", "v").agg(sum("w").as("w"))
         .filter(col("w") > 0))
-      .getOrElse {
-        adjCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        val sig = graft.lake.CorpusIndexCache.signature(d)
-        adjCache.compute((s, d), (_, cur) =>
-          if (cur != null && cur._1 == sig) cur
-          else (sig, coOrderWeighted(s, d).localCheckpoint()))._2
-      }
+      .getOrElse(adjMemo(s, d)(coOrderWeighted(s, d)))
 
   /** g1: PageRank (Brin & Page 1998) on the bipartite order graph —
     * nodes are active customers (id 2c) and suppliers (id 2s+1), one
@@ -698,21 +684,22 @@ object Graph {
     * ordered by size — comp_size is unique per row, so the order is
     * total. Labels are component-minimum part ids (the contraction's
     * canonical center), mirrored exactly by the oracle's min-reachable
-    * closure.
+    * closure. The labeling is memoized per (session, tier) like d5's
+    * ([[graft.text.Dedup.memoComponents]]): a warm call skips the
+    * contraction fixpoint and runs only the two histogram aggregates.
     */
   private[graft] val MinCoOrders = 3
-  def g5Components(s: SparkSession, d: String): DataFrame = {
-    val strong = coAdj(s, d)
-      .filter(col("u") < col("v") && col("w") >= MinCoOrders)
-      .select("u", "v")
-    graft.text.Dedup.connectedComponents(strong)
+  def g5Components(s: SparkSession, d: String): DataFrame =
+    graft.text.Dedup.memoComponents(s, d, "co_strong")(
+      graft.text.Dedup.connectedComponents(coAdj(s, d)
+        .filter(col("u") < col("v") && col("w") >= MinCoOrders)
+        .select("u", "v")))
       .groupBy("component").agg(count(lit(1)).as("comp_size"))
       .groupBy("comp_size")
       .agg(count(lit(1)).as("n_components"),
         min("component").as("min_component"),
         max("component").as("max_component"))
       .orderBy("comp_size")
-  }
 
   /** g6: k-CORE extraction — the maximal subgraph where every part has
     * ≥ [[CoreK]] co-order neighbors inside it (Seidman's cohesion
@@ -893,16 +880,12 @@ object Graph {
     * final localCheckpoint, so a hit costs nothing. Stopped sessions
     * sweep lazily.
     */
-  private val lpaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, IndexedSeq[DataFrame])]()
-  private[graft] def lpaStates(s: SparkSession, d: String): IndexedSeq[DataFrame] = {
-    lpaCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    lpaCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, labelPropagationStates(
-        coAdj(s, d).filter(col("w") >= MinCoOrders), LpaRounds)))._2
-  }
+  private val lpaMemo =
+    new graft.lake.SessionMemo[String, IndexedSeq[DataFrame]](identity)
+  private[graft] def lpaStates(s: SparkSession, d: String): IndexedSeq[DataFrame] =
+    lpaMemo(s, d, graft.lake.CorpusIndexCache.signature(d))(
+      labelPropagationStates(
+        coAdj(s, d).filter(col("w") >= MinCoOrders), LpaRounds))
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
     lpaStates(s, d).last
 
@@ -911,7 +894,7 @@ object Graph {
     * increment lands in the tier (the [[adjacencyStamp]] posture).
     */
   def lpaStamp(s: SparkSession, d: String): Option[String] =
-    Option(lpaCache.get((s, d))).map(_._1)
+    lpaMemo.peek(s, d).map(_._1)
 
   /** Memoized REFINED labels — the [[lpaLabels]] recipe one level up:
     * g11/g12/g13/g14 all consume the same deterministic local-move
@@ -922,17 +905,10 @@ object Graph {
     * arithmetic off a deterministic adjacency — GraphSpec pins it),
     * staleness re-refines, state is one checkpointed node-sized frame.
     */
-  private val refineCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
-  private[graft] def refinedLabels(s: SparkSession, d: String): DataFrame = {
-    refineCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    refineCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, louvainRefine(
-        coAdj(s, d).filter(col("w") >= MinCoOrders), lpaLabels(s, d))
-        .localCheckpoint()))._2
-  }
+  private val refineMemo = new graft.lake.SessionMemo.Checkpointed
+  private[graft] def refinedLabels(s: SparkSession, d: String): DataFrame =
+    refineMemo(s, d)(louvainRefine(
+      coAdj(s, d).filter(col("w") >= MinCoOrders), lpaLabels(s, d)))
 
   /** WARM-START LPA after an adjacency increment (r13 verdict #3a):
     * instead of re-running all [[LpaRounds]] rounds over the whole
@@ -981,18 +957,16 @@ object Graph {
     */
   def warmLpaAfterAppend(s: SparkSession, d: String,
       deltaLineitem: DataFrame, prevSig: String): DataFrame = {
-    val cur = lpaCache.get((s, d))
-    if (cur == null || cur._1 != prevSig)
+    val cur = lpaMemo.peek(s, d).filter(_._1 == prevSig).getOrElse(
       throw new IllegalStateException(
         s"warmLpaAfterAppend($d): memoized LPA stamp " +
-          s"${Option(cur).map(_._1)} != expected $prevSig — corpus " +
-          "changed under the maintainer; fall back to a full recompute")
+          s"${lpaMemo.peek(s, d).map(_._1)} != expected $prevSig — corpus " +
+          "changed under the maintainer; fall back to a full recompute"))
     val touched = coOrderWeightedFrom(deltaLineitem)
       .select(col("u").as("node")).distinct()
     val adj = coAdj(s, d).filter(col("w") >= MinCoOrders)
     val states = warmLpaStates(adj, cur._2, touched)
-    lpaCache.put((s, d),
-      (graft.lake.CorpusIndexCache.signature(d), states))
+    lpaMemo.put(s, d, graft.lake.CorpusIndexCache.signature(d), states)
     states.last
   }
 

@@ -140,15 +140,9 @@ object KMeans {
     * fixed-point integer means — KMeansSpec); staleness re-derives
     * via the whole-tier-dir signature.
     */
-  private val assignCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
-  private[graft] def assignedCached(s: SparkSession, d: String): DataFrame = {
-    assignCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    assignCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, kMeans(s, d, iters = 1).localCheckpoint()))._2
-  }
+  private val assignMemo = new graft.lake.SessionMemo.Checkpointed
+  private[graft] def assignedCached(s: SparkSession, d: String): DataFrame =
+    assignMemo(s, d)(kMeans(s, d, iters = 1))
 
   /** s5: one Lloyd update (seed → assign → fixed-point re-center →
     * re-assign), the full iterative machinery in oracle-checkable form.

@@ -472,20 +472,18 @@ object Dedup {
     * fixpoint (~1.5–2.5 s at sf0.1) on every invocation, over at most
     * three distinct pair relations. A hit is bit-identical to a re-run
     * (content-keyed hashing, integer CC off a deterministic corpus),
-    * staleness re-derives via the whole-tier-dir signature, and
+    * staleness re-derives via the whole-tier-dir signature, lost
+    * checkpoint blocks rebuild ([[graft.lake.SessionMemo]]), and
     * nothing persists outside the SparkSession. `variant` names the
-    * pair relation ("cand", "nd08", "cand_even").
+    * pair relation ("cand", "nd08", "cand_even", and "co_strong": g5's
+    * strong co-order graph).
     */
-  private val compCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, DataFrame)]()
+  private val compMemo = new graft.lake.SessionMemo[(String, String),
+    DataFrame](Seq(_))
   private[graft] def memoComponents(s: SparkSession, d: String,
-      variant: String)(build: => DataFrame): DataFrame = {
-    compCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    compCache.compute((s, d, variant), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, build.localCheckpoint()))._2
-  }
+      variant: String)(build: => DataFrame): DataFrame =
+    compMemo(s, (d, variant), graft.lake.CorpusIndexCache.signature(d))(
+      build.localCheckpoint())
 
   /** Corpus API: near-dup removal with exactly ONE survivor (the global
     * minimum doc_id) per transitive dup-cluster — verified pairs →

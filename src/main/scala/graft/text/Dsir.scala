@@ -113,15 +113,9 @@ object Dsir {
     * (content-hashed features off a deterministic corpus); the served
     * path is consulted first by every caller.
     */
-  private val ffCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
-  private def flaggedCorpusFeatures(s: SparkSession, d: String): DataFrame = {
-    ffCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    ffCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, flaggedFeatures(documents(s, d)).localCheckpoint()))._2
-  }
+  private val ffMemo = new graft.lake.SessionMemo.Checkpointed
+  private def flaggedCorpusFeatures(s: SparkSession, d: String): DataFrame =
+    ffMemo(s, d)(flaggedFeatures(documents(s, d)))
 
   /** Per-feature smoothed rate ratio in ppm:
     * floor(10⁶ · ((ct+1)/(tt+B)) / ((cr+1)/(rt+B))) computed in pure

@@ -168,16 +168,9 @@ object SetSimilarity {
     * named as ~2 s of a 4.5 s run). Bit-identical on a hit
     * (content-hashed shingles off a deterministic corpus).
     */
-  private val groupedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
-  private def groupedSetsCached(s: SparkSession, d: String): DataFrame = {
-    groupedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val sig = graft.lake.CorpusIndexCache.signature(d)
-    groupedCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, groupedSets(hashedSets(documents(s, d)))
-        .localCheckpoint()))._2
-  }
+  private val groupedMemo = new graft.lake.SessionMemo.Checkpointed
+  private def groupedSetsCached(s: SparkSession, d: String): DataFrame =
+    groupedMemo(s, d)(groupedSets(hashedSets(documents(s, d))))
 
   /** Corpus API over any (doc_id, text) frame.
     *

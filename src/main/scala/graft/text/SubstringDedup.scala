@@ -131,22 +131,14 @@ object SubstringDedup {
   // invocation when no `ngo` table serves; the relation is
   // deterministic (content digests) and the served path is consulted
   // first, so a freshly persisted table is never masked
-  private val occCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
+  private val occMemo = new graft.lake.SessionMemo.Checkpointed
   private def occurrences(s: SparkSession, d: String): DataFrame =
     servedOccurrences(s, d)
       // cold build: the ngram digest is a multiplying kernel in the
       // scan stage — spread a narrow (single-split) tier across the
       // cores first (r18, [[graft.ops.Spread]]); identity at scale
-      .getOrElse {
-        occCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        val sig = graft.lake.CorpusIndexCache.signature(d)
-        occCache.compute((s, d), (_, cur) =>
-          if (cur != null && cur._1 == sig) cur
-          else (sig, occurrencesOf(
-            graft.ops.Spread.ifNarrow(documents(s, d), col("doc_id")))
-            .localCheckpoint()))._2
-      }
+      .getOrElse(occMemo(s, d)(occurrencesOf(
+        graft.ops.Spread.ifNarrow(documents(s, d), col("doc_id")))))
 
   /** (doc_id, n_tokens) — the left frame outputs join coverage onto,
     * so docs with no duplicated span (and docs too short to hold one)

@@ -564,28 +564,19 @@ object TextAnalysis {
     * subscribe to); serving costs one metastore check + a vocab-sized
     * collect per call, noise next to any consumer query.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (String, DataFrame, Seq[(Int, String, String, Long)])]()
+  private val bpeMemo = new graft.lake.SessionMemo[String,
+    (DataFrame, Seq[(Int, String, String, Long)])](v => Seq(v._1))
   /** Test hook: simulate a fresh session (the persisted-artifact
     * serving path is only reachable when the memo misses).
     */
-  private[graft] def evictBpeMemo(): Unit = bpeCache.clear()
+  private[graft] def evictBpeMemo(): Unit = bpeMemo.clear()
   private def bpeTrained(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
-    bpeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val path = s"$d/documents.parquet"
     val sig = graft.lake.CorpusIndexCache.signature(path)
-    val cur = bpeCache.get((s, path))
-    if (cur != null && cur._1 == sig) return (cur._2, cur._3)
-    servedBpe(s, d) match {
-      case Some(r) => r
-      case None =>
-        val e = bpeCache.compute((s, path), (_, c) =>
-          if (c != null && c._1 == sig) c
-          else { val (w, m) = trainBpe(s, d); (sig, w, m) })
-        (e._2, e._3)
-    }
+    bpeMemo.hit(s, path, sig)
+      .orElse(servedBpe(s, d))
+      .getOrElse(bpeMemo(s, path, sig)(trainBpe(s, d)))
   }
 
   // ---- persisted tokenizer artifact (r14 verdict #3) -----------------
@@ -1184,16 +1175,9 @@ object TextAnalysis {
   // the corpus BPE encode per invocation when no bpets table serves;
   // deterministic (frozen merges off the memoized trainer), served
   // path consulted first so a persisted/appended table is never masked
-  private val bpeStreamCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]()
+  private val bpeStreamMemo = new graft.lake.SessionMemo.Checkpointed
   private[graft] def bpeStream(s: SparkSession, d: String): DataFrame =
-    servedBpeStream(s, d).getOrElse {
-      bpeStreamCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      val sig = graft.lake.CorpusIndexCache.signature(d)
-      bpeStreamCache.compute((s, d), (_, cur) =>
-        if (cur != null && cur._1 == sig) cur
-        else (sig, bpeTokenText(s, d).localCheckpoint()))._2
-    }
+    servedBpeStream(s, d).getOrElse(bpeStreamMemo(s, d)(bpeTokenText(s, d)))
 
   /** NIGHTLY stream maintenance — run AFTER [[maintainBpe]] (the
     * stream derives from whatever tokenizer that leg left serving):

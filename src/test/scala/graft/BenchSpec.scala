@@ -417,4 +417,21 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseTimes(mainPhase) ==
       Map("q1" -> 0.5, "q2" -> 1.25, "q3" -> 1.25))
   }
+
+  test("codegen_compiles: per-query compile counts per pass; a repeat compiles nothing; parseTimes ignores it") {
+    val json = Bench.codegenJson(Seq(Map("q1" -> 11L, "q2" -> 3L),
+      Map("q1" -> 11L, "q2" -> 0L)))
+    assert(json == """{"q1":[11,11],"q2":[3,0]}""")
+    val line = s"""{"metric":"total","value":1.75,"unit":"sec","passes":2,"queries":{"q1":0.5,"q2":1.25},"graph_persist_sec":-1.0,"graph_served":{},"graph_served_samples":{},"errors":[],"codegen_compiles":$json,"retired":[],"sf":"testdata/sf0.1"}"""
+    assert(Bench.parseTimes(line) == Map("q1" -> 0.5, "q2" -> 1.25))
+    // the counter the field reads: a new plan compiles, its repeat hits
+    val spark = TestSpark.spark
+    val q = spark.range(4).selectExpr(s"id + ${System.nanoTime()}L AS x")
+    val c0 = Bench.compileCount()
+    q.collect()
+    val c1 = Bench.compileCount()
+    q.collect()
+    assert(c1 > c0, "a never-seen plan must compile")
+    assert(Bench.compileCount() == c1, "its repeat must hit the cache")
+  }
 }
