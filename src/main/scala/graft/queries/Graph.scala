@@ -868,7 +868,7 @@ object Graph {
 
   /** Memoized LPA labels: g8, g9 (and any future community consumer)
     * share ONE propagation run per (session, tier-dir content) — the
-    * bpeCache recipe (r12 verdict #5: g9 re-ran the full 5-round LPA
+    * bpeMemo recipe (r12 verdict #5: g9 re-ran the full 5-round LPA
     * after g8 had just computed identical labels, a 4.22 s cold-bench
     * cost whose useful part is two label-keyed aggs). Labels are a
     * corpus-build artifact exactly like t30's merges: deterministic
@@ -883,7 +883,7 @@ object Graph {
   private val lpaMemo =
     new graft.lake.SessionMemo[String, IndexedSeq[DataFrame]](identity)
   private[graft] def lpaStates(s: SparkSession, d: String): IndexedSeq[DataFrame] =
-    lpaMemo(s, d, graft.lake.CorpusIndexCache.signature(d))(
+    lpaMemo(s, d, graft.lake.SessionMemo.signature(d))(
       labelPropagationStates(
         coAdj(s, d).filter(col("w") >= MinCoOrders), LpaRounds))
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
@@ -966,7 +966,7 @@ object Graph {
       .select(col("u").as("node")).distinct()
     val adj = coAdj(s, d).filter(col("w") >= MinCoOrders)
     val states = warmLpaStates(adj, cur._2, touched)
-    lpaMemo.put(s, d, graft.lake.CorpusIndexCache.signature(d), states)
+    lpaMemo.put(s, d, graft.lake.SessionMemo.signature(d), states)
     states.last
   }
 

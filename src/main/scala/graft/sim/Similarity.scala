@@ -342,20 +342,18 @@ object Similarity {
     }
   }
 
-  /** Corpus row count, cached per directory: one metadata-only parquet
-    * count action the first time a corpus is indexed — the same "know n
-    * before sizing the hash family" step any real ANN index build does.
+  /** Corpus row count, memoized per (session, corpus): one metadata-only
+    * parquet count action the first time a session indexes a corpus —
+    * the same "know n before sizing the hash family" step any real ANN
+    * index build does.
     * Signature-keyed like [[bucketIndexCache]]: a regenerated corpus
     * re-counts (n sizes the hash family — a stale n is a stale index).
     */
-  private val corpusCount =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private val corpusCount = new graft.lake.SessionMemo[String, Long](_ => Nil)
   private def embeddingCount(s: SparkSession, d: String): Long = {
     val path = s"$d/embeddings.parquet"
-    val sig = graft.lake.CorpusIndexCache.signature(path)
-    corpusCount.compute(path, (_, cur) =>
-      if (cur != null && cur._1 == sig) cur
-      else (sig, embeddings(s, d).count()))._2
+    corpusCount(s, path, graft.lake.SessionMemo.signature(path))(
+      embeddings(s, d).count())
   }
 
   /** IVF centroid stride — corpus-adaptive like [[bitsFor]]: every
@@ -418,11 +416,11 @@ object Similarity {
     * recomputing. Keyed by session too: a DataFrame is bound to the
     * session that analyzed it, and test suites run several. Lifecycle
     * (staleness on corpus rewrite, stopped-session retention) is owned
-    * by [[graft.lake.CorpusIndexCache]]; `ColdIndexSpec` pins it.
+    * by [[graft.lake.SessionMemo]]; `ColdIndexSpec` pins it.
     */
-  private[graft] val bucketIndexCache = new graft.lake.CorpusIndexCache
+  private[graft] val bucketIndexCache = new graft.lake.SessionMemo.Persisted
   private[graft] def bucketTable(s: SparkSession, d: String): DataFrame =
-    bucketIndexCache.get(s, s"$d/embeddings.parquet") {
+    bucketIndexCache(s, s"$d/embeddings.parquet") {
       embeddings(s, d)
         .select(col("vec_id"),
           posexplode(expr(bucketsSql(bitsFor(embeddingCount(s, d)),
@@ -563,7 +561,7 @@ object Similarity {
     * Production analogue: the scoring index persisted as a table
     * bucketed by (tbl, bk) at corpus-build time.
     */
-  private[graft] val floatBucketIndexCache = new graft.lake.CorpusIndexCache
+  private[graft] val floatBucketIndexCache = new graft.lake.SessionMemo.Persisted
   private def floatBucketIndex(s: SparkSession, d: String): DataFrame = {
     // With a persisted table present, the session-cache BUILD becomes
     // the bucketed table scan (no hyperplane compute, no repartition —
@@ -573,7 +571,7 @@ object Similarity {
     // instead re-decoded the parquet on EVERY query (r10, measured at
     // the sf10 tier). No table → the from-scratch build as before.
     val path = s"$d/embeddings.parquet"
-    floatBucketIndexCache.get(s, path) {
+    floatBucketIndexCache(s, path) {
       graft.lake.IndexTables.serve(s, AnnTablePrefix, path).getOrElse {
         bucketTable(s, d).join(normedEmbeddings(s, d), "vec_id")
           .repartition(col("tbl"), col("bk"))
@@ -813,9 +811,9 @@ object Similarity {
     * this is a persisted corpus artifact written once per build), and
     * the same lifecycle/staleness contract applies.
     */
-  private[graft] val quantizedIndexCache = new graft.lake.CorpusIndexCache
+  private[graft] val quantizedIndexCache = new graft.lake.SessionMemo.Persisted
   private[sim] def quantizedIndex(s: SparkSession, d: String): DataFrame =
-    quantizedIndexCache.get(s, s"$d/embeddings.parquet") {
+    quantizedIndexCache(s, s"$d/embeddings.parquet") {
       Quantization.quantizeInt8(embeddings(s, d))
         .select(col("vec_id"), col("qvec"), col("qscale").as("qs"),
           expr(s"sqrt(${dotSql("embedding", "embedding")})").as("nrm"))
@@ -1130,7 +1128,7 @@ object Similarity {
     * index is built once per (session, dir) with the CORPUS-sized
     * family and pre-partitioned on (tbl, bk) like [[floatBucketIndex]].
     */
-  private[graft] val corpusBucketIndexCache = new graft.lake.CorpusIndexCache
+  private[graft] val corpusBucketIndexCache = new graft.lake.SessionMemo.Persisted
 
   private val AdmTablePrefix = "adm"
 
@@ -1218,7 +1216,7 @@ object Similarity {
     val path = s"$d/embeddings.parquet"
     // table-served scans go THROUGH the session cache (scan once,
     // memory after) — the floatBucketIndex policy
-    val ci = corpusBucketIndexCache.get(s, path) {
+    val ci = corpusBucketIndexCache(s, path) {
       graft.lake.IndexTables.serve(s, AdmTablePrefix, path).getOrElse(
         s12CorpusIndexFrame(s, d).repartition(col("tbl"), col("bk")))
     }
@@ -1261,9 +1259,9 @@ object Similarity {
     * would simply ride the bucketed table's schema.
     */
   private[graft] val labeledBucketIndexCache =
-    new graft.lake.CorpusIndexCache
+    new graft.lake.SessionMemo.Persisted
   private[graft] def labeledBucketTable(s: SparkSession, d: String): DataFrame =
-    labeledBucketIndexCache.get(s, s"$d/embeddings.parquet") {
+    labeledBucketIndexCache(s, s"$d/embeddings.parquet") {
       embeddings(s, d)
         .select(col("vec_id"), col("label"),
           posexplode(expr(bucketsSql(bitsFor(embeddingCount(s, d)),

@@ -482,7 +482,7 @@ object Dedup {
     DataFrame](Seq(_))
   private[graft] def memoComponents(s: SparkSession, d: String,
       variant: String)(build: => DataFrame): DataFrame =
-    compMemo(s, (d, variant), graft.lake.CorpusIndexCache.signature(d))(
+    compMemo(s, (d, variant), graft.lake.SessionMemo.signature(d))(
       build.localCheckpoint())
 
   /** Corpus API: near-dup removal with exactly ONE survivor (the global
@@ -834,7 +834,7 @@ object Dedup {
     // [[persistBandIndex]] table present, "once" means once per CORPUS:
     // any later session serves the signature-stamped table instead of
     // rebuilding (r10; the s12/floatBucketIndex lifecycle).
-    val cb = corpusBandIndexCache.get(s, s"$d/documents.parquet")(
+    val cb = corpusBandIndexCache(s, s"$d/documents.parquet")(
       graft.lake.IndexTables
         .serve(s, BandTablePrefix, s"$d/documents.parquet")
         .getOrElse(bandIndex(corp)))
@@ -842,9 +842,9 @@ object Dedup {
       .select(col("doc_id")).orderBy("doc_id")
   }
   /** Lifecycle (staleness on corpus rewrite, stopped-session retention)
-    * owned by [[graft.lake.CorpusIndexCache]]; `ColdIndexSpec` pins it.
+    * owned by [[graft.lake.SessionMemo]]; `ColdIndexSpec` pins it.
     */
-  private[graft] val corpusBandIndexCache = new graft.lake.CorpusIndexCache
+  private[graft] val corpusBandIndexCache = new graft.lake.SessionMemo.Persisted
 
   private val BandTablePrefix = "band"
 

@@ -547,10 +547,10 @@ object TextAnalysis {
   private[graft] val BpeReplacePasses = 4
 
   /** Memoized training: t30 and t31 share ONE training run per
-    * (session, corpus content) — the CorpusIndexCache recipe, with the
-    * merge list riding alongside the state DataFrame (which alone
+    * (session, corpus content) in a [[graft.lake.SessionMemo]], with
+    * the merge list riding alongside the state DataFrame (which alone
     * can't carry it). The state is driver-resident from the in-memory
-    * trainer, so a cache hit costs nothing; a rewritten corpus changes
+    * trainer, so a memo hit costs nothing; a rewritten corpus changes
     * the signature and re-trains; stopped sessions sweep lazily.
     *
     * PERSISTED-ARTIFACT serving (r14 verdict #3): before training,
@@ -558,11 +558,11 @@ object TextAnalysis {
     * a FRESH SESSION then loads the parameter-sized merge list + the
     * vocab-sized word state instead of paying a full retrain, the
     * cheapest artifact-vs-recompute win in the repo. The served leg is
-    * NOT memoized in [[bpeCache]] (its plan would dangle across a
-    * compact/drop, the ADVICE r13 #1 failure mode the table caches
-    * solved with invalidateAll — which this private memo doesn't
-    * subscribe to); serving costs one metastore check + a vocab-sized
-    * collect per call, noise next to any consumer query.
+    * NOT memoized (its plan would dangle across a compact/drop, the
+    * ADVICE r13 #1 failure mode; only persisted memos are reached by
+    * `SessionMemo.invalidateAll`, and this one is not persisted);
+    * serving costs one metastore check + a vocab-sized collect per
+    * call, noise next to any consumer query.
     */
   private val bpeMemo = new graft.lake.SessionMemo[String,
     (DataFrame, Seq[(Int, String, String, Long)])](v => Seq(v._1))
@@ -573,7 +573,7 @@ object TextAnalysis {
   private def bpeTrained(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     val path = s"$d/documents.parquet"
-    val sig = graft.lake.CorpusIndexCache.signature(path)
+    val sig = graft.lake.SessionMemo.signature(path)
     bpeMemo.hit(s, path, sig)
       .orElse(servedBpe(s, d))
       .getOrElse(bpeMemo(s, path, sig)(trainBpe(s, d)))

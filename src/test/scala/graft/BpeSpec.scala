@@ -40,7 +40,7 @@ class BpeSpec extends AnyFunSuite {
       val vocab = rowSet(TextAnalysis.queries("t31_bpe_vocab")(spark, d))
       TextAnalysis.persistBpe(spark, d)
       assert(TextAnalysis.bpeStamp(spark, d).contains(
-        graft.lake.CorpusIndexCache.signature(s"$d/documents.parquet")))
+        graft.lake.SessionMemo.signature(s"$d/documents.parquet")))
       // a fresh session = no memo: the table must serve, identically
       TextAnalysis.evictBpeMemo()
       assert(rowSet(TextAnalysis.queries("t30_bpe_train")(spark, d))
@@ -118,7 +118,7 @@ class BpeSpec extends AnyFunSuite {
       val sig1 = TextAnalysis.bpeStamp(spark, d).get
       small.write.mode("append").parquet(s"$d/documents.parquet")
       TextAnalysis.maintainBpe(spark, d, sig1, policy = "on-doubling")
-      val newSig = graft.lake.CorpusIndexCache
+      val newSig = graft.lake.SessionMemo
         .signature(s"$d/documents.parquet")
       assert(TextAnalysis.bpeStamp(spark, d).contains(newSig),
         "on-doubling restamp did not move the stamp")
@@ -148,7 +148,7 @@ class BpeSpec extends AnyFunSuite {
         .serve(spark, "bpem", s"$d/documents.parquet").get
         .select("trained_bytes").limit(1).collect()(0).getLong(0)
       assert(TextAnalysis.bpeStamp(spark, d).contains(
-        graft.lake.CorpusIndexCache.signature(s"$d/documents.parquet")))
+        graft.lake.SessionMemo.signature(s"$d/documents.parquet")))
 
       // --- unknown policy rejected (stamp check passes first)
       intercept[IllegalArgumentException] {

@@ -49,7 +49,7 @@ class BucketedAnnIndexSpec extends AnyFunSuite {
       assert(IndexTables.serve(spark, "annf", path).isDefined,
         "freshly persisted index not served")
 
-      // a FRESH session (cold CorpusIndexCache — it keys by session)
+      // a FRESH session (cold session memos — they key by session)
       // must serve the table — its cache entry is the cheap bucketed
       // table SCAN, so the expensive hyperplane index (bucketTable's
       // cache) is never consulted, and the from-scratch build

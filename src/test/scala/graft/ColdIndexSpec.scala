@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.lake.CorpusIndexCache
+import graft.lake.SessionMemo
 import graft.sim.Similarity
 import graft.text.Dedup
 
@@ -20,13 +20,13 @@ class ColdIndexSpec extends AnyFunSuite {
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("CorpusIndexCache: hit on unchanged path, rebuild on rewrite, explicit invalidate") {
-    val cache = new CorpusIndexCache
+  test("SessionMemo: hit on unchanged path, rebuild on rewrite, explicit invalidate") {
+    val cache = new SessionMemo.Persisted
     val dir = freshDir("graft_cis")
     Files.write(Paths.get(dir, "part-0"), "v1".getBytes)
     val b0 = cache.builds.get()
 
-    def probe() = cache.get(spark, dir)(spark.range(3).toDF("id"))
+    def probe() = cache(spark, dir)(spark.range(3).toDF("id"))
     probe(); assert(cache.builds.get() == b0 + 1, "first access builds")
     probe(); assert(cache.builds.get() == b0 + 1, "unchanged path is a hit")
 
@@ -34,22 +34,22 @@ class ColdIndexSpec extends AnyFunSuite {
     probe(); assert(cache.builds.get() == b0 + 2, "changed content rebuilds")
     probe(); assert(cache.builds.get() == b0 + 2, "then hits again")
 
-    cache.invalidate(dir)
-    probe(); assert(cache.builds.get() == b0 + 3, "invalidate() forces rebuild")
+    SessionMemo.invalidateAll(dir)
+    probe(); assert(cache.builds.get() == b0 + 3, "invalidateAll() forces rebuild")
   }
 
   test("signature moves on file add/remove/rewrite and is stable otherwise") {
     val dir = freshDir("graft_sig")
     Files.write(Paths.get(dir, "a"), "x".getBytes)
-    val s1 = CorpusIndexCache.signature(dir)
-    assert(s1 == CorpusIndexCache.signature(dir), "stable on no change")
+    val s1 = SessionMemo.signature(dir)
+    assert(s1 == SessionMemo.signature(dir), "stable on no change")
     Files.write(Paths.get(dir, "b"), "y".getBytes)
-    val s2 = CorpusIndexCache.signature(dir)
+    val s2 = SessionMemo.signature(dir)
     assert(s2 != s1, "file add moves the signature")
     Files.delete(Paths.get(dir, "a"))
-    val s3 = CorpusIndexCache.signature(dir)
+    val s3 = SessionMemo.signature(dir)
     assert(s3 != s2 && s3 != s1, "file remove moves the signature")
-    assert(CorpusIndexCache.signature(s"$dir/nope") == "absent")
+    assert(SessionMemo.signature(s"$dir/nope") == "absent")
   }
 
   test("a regenerated embeddings corpus rebuilds the LSH bucket index (no stale vec_ids)") {

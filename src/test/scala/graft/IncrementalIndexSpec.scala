@@ -67,7 +67,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       // equals a from-scratch rebuild row for row
       val grown = spark.read.parquet(p)
       assert(Dedup.bandIndexStamp(spark, p)
-        .contains(graft.lake.CorpusIndexCache.signature(p)),
+        .contains(graft.lake.SessionMemo.signature(p)),
         "append did not re-stamp to the grown corpus")
       val appended = Dedup.servedBandIndex(spark, p).get
       assert(rowSet(appended) == rowSet(Dedup.bandIndex(grown)),
@@ -266,7 +266,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
 
       // fresh-stamped and equal to a from-scratch rebuild on survivors
       assert(Dedup.bandIndexStamp(spark, p)
-        .contains(graft.lake.CorpusIndexCache.signature(p)),
+        .contains(graft.lake.SessionMemo.signature(p)),
         "retraction did not re-stamp to the post-deletion corpus")
       val served = Dedup.servedBandIndex(spark, p).get
       assert(rowSet(served) == rowSet(Dedup.bandIndex(survivors)),
@@ -410,7 +410,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       // still SERVING (stamp == grown tier), and the merged relation
       // equals the from-scratch adjacency over the full facts
       assert(Graph.adjacencyStamp(spark, d)
-        .contains(graft.lake.CorpusIndexCache.signature(d)),
+        .contains(graft.lake.SessionMemo.signature(d)),
         "append did not re-stamp to the grown tier")
       val merged = Graph.coAdj(spark, d)
       val fullLi = spark.read.parquet(s"$d/lineitem.parquet")
@@ -464,7 +464,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       Graph.retractAdjacencyOrders(spark, d, victimLi, prevSig)
 
       assert(Graph.adjacencyStamp(spark, d)
-        .contains(graft.lake.CorpusIndexCache.signature(d)),
+        .contains(graft.lake.SessionMemo.signature(d)),
         "retraction did not re-stamp to the shrunk tier")
       val merged = Graph.coAdj(spark, d)
       assert(rowSet(merged) == rowSet(Graph.coOrderWeightedFrom(keepLi)),
@@ -514,7 +514,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
         Graph.adjacencyStamp(spark, d).get)
 
       assert(Graph.g1Stamp(spark, d)
-        .contains(graft.lake.CorpusIndexCache.signature(d)),
+        .contains(graft.lake.SessionMemo.signature(d)),
         "g1 append did not re-stamp to the grown tier")
       // served merge-on-read (per-key sum + recomputed out-weights)
       // equals the from-scratch denormalized relation on the full facts
@@ -558,7 +558,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
       Graph.appendG1Increment(spark, d, deltaLi, deltaOrd, prevSig)
 
       assert(Graph.g1Stamp(spark, d)
-        .contains(graft.lake.CorpusIndexCache.signature(d)),
+        .contains(graft.lake.SessionMemo.signature(d)),
         "legacy fallback did not re-stamp to the grown tier")
       assert(!graft.lake.IndexTables.schemaOf(spark, Graph.G1Prefix, d)
         .get.fieldNames.contains("wout"),

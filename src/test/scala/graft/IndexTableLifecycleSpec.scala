@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.lake.{CorpusIndexCache, IndexTables}
+import graft.lake.{IndexTables, SessionMemo}
 import graft.sim.Similarity
 
 /** Lifecycle hygiene of the persisted index tables (ADVICE r10, all
@@ -146,17 +146,25 @@ class IndexTableLifecycleSpec extends AnyFunSuite {
   }
 
   test("invalidateAll reaches every registered cache instance") {
-    val c1 = new CorpusIndexCache
-    val c2 = new CorpusIndexCache
+    val c1 = new SessionMemo.Persisted
+    val c2 = new SessionMemo.Persisted
+    val ck = new SessionMemo.Checkpointed
     val dir = java.nio.file.Files.createTempDirectory("idx_lc_inv").toString
     import spark.implicits._
-    c1.get(spark, dir)(Seq(1).toDF("x"))
-    c2.get(spark, dir)(Seq(2).toDF("x"))
-    val (b1, b2) = (c1.builds.get(), c2.builds.get())
-    CorpusIndexCache.invalidateAll(dir)
-    c1.get(spark, dir)(Seq(1).toDF("x"))
-    c2.get(spark, dir)(Seq(2).toDF("x"))
+    c1(spark, dir)(Seq(1).toDF("x"))
+    c2(spark, dir)(Seq(2).toDF("x"))
+    ck(spark, dir)(Seq(3).toDF("x"))
+    val (b1, b2, bk) = (c1.builds.get(), c2.builds.get(), ck.builds.get())
+    SessionMemo.invalidateAll(dir)
+    c1(spark, dir)(Seq(1).toDF("x"))
+    c2(spark, dir)(Seq(2).toDF("x"))
     assert(c1.builds.get() == b1 + 1 && c2.builds.get() == b2 + 1,
       "invalidateAll missed a registered instance")
+    // a checkpointed entry has no lineage to dangle, and
+    // Graph.warmLpaAfterAppend reads one right after an append
+    // invalidated its tier: it must survive
+    assert(ck(spark, dir)(Seq(3).toDF("x")).as[Int].collect().toSeq == Seq(3))
+    assert(ck.builds.get() == bk,
+      "invalidateAll evicted a checkpointed entry")
   }
 }

@@ -98,9 +98,9 @@ class MaintenanceSpec extends AnyFunSuite {
         "ann reported maintained with no ANN index serving and no delta")
 
       // freshness: every stamp moved to the post-delta signature
-      val docSig = graft.lake.CorpusIndexCache.signature(
+      val docSig = graft.lake.SessionMemo.signature(
         s"$d/documents.parquet")
-      val tierSig = graft.lake.CorpusIndexCache.signature(d)
+      val tierSig = graft.lake.SessionMemo.signature(d)
       assert(Dedup.bandIndexStamp(spark, s"$d/documents.parquet")
         .contains(docSig), "band index stale after nightly")
       assert(Winnowing.fingerprintStamp(spark, d).contains(docSig),
@@ -243,7 +243,7 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(report.maintained("coadj") && report.maintained("g1_edges") &&
         report.maintained("lpa"),
         "graph artifacts not re-stamped on a docs-only nightly")
-      val tierSig = graft.lake.CorpusIndexCache.signature(d)
+      val tierSig = graft.lake.SessionMemo.signature(d)
       assert(Graph.adjacencyStamp(spark, d).contains(tierSig),
         "adjacency stranded stale — the docs landing moved the tier " +
           "signature and no re-stamp followed")
@@ -278,7 +278,7 @@ class MaintenanceSpec extends AnyFunSuite {
         assert(report.maintained("ann"),
           s"ann skipped despite serving (base=$baseN)")
         assert(Similarity.annIndexStamp(spark, d).contains(
-          graft.lake.CorpusIndexCache.signature(s"$d/embeddings.parquet")),
+          graft.lake.SessionMemo.signature(s"$d/embeddings.parquet")),
           s"ann index stale after nightly (base=$baseN)")
         val served = rowSet(Similarity.s3EmbeddingNeardup(spark, d))
         graft.lake.IndexTables.drop(spark, "annf", s"$d/embeddings.parquet")
@@ -311,7 +311,7 @@ class MaintenanceSpec extends AnyFunSuite {
         report.maintained("lpa"),
         "graph artifacts not re-stamped on an embeddings-only nightly — " +
           "the embeddings landing moved the tier signature they sign")
-      val tierSig = graft.lake.CorpusIndexCache.signature(d)
+      val tierSig = graft.lake.SessionMemo.signature(d)
       assert(Graph.adjacencyStamp(spark, d).contains(tierSig),
         "adjacency stranded stale after embeddings-only nightly")
       assert(Graph.g1Stamp(spark, d).contains(tierSig),

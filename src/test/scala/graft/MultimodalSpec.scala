@@ -371,7 +371,7 @@ class MultimodalSpec extends AnyFunSuite {
       delta.write.mode("append").parquet(s"$d/documents.parquet")
       Multimodal.appendPhashIndex(spark, d, delta, prevSig)
       assert(Multimodal.phashStamp(spark, d).contains(
-        graft.lake.CorpusIndexCache.signature(s"$d/documents.parquet")),
+        graft.lake.SessionMemo.signature(s"$d/documents.parquet")),
         "phash append did not re-stamp to the grown corpus")
       val full = spark.read.parquet(s"$d/documents.parquet")
       assert(rows(graft.lake.IndexTables.serve(spark, "mmph",

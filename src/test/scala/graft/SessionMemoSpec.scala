@@ -42,8 +42,10 @@ class SessionMemoSpec extends AnyFunSuite {
 
   test("lost checkpoint blocks rebuild: every memoized family returns its pre-loss result") {
     val s = spark.newSession()
+    // the first six read checkpointed memos, the last two persisted ones
     val families = Seq("d5_components", "g5_components", "s5_kmeans_assign",
-      "t42_dsir_weights", "t41_substring_dedup", "d10_allpairs_jaccard")
+      "t42_dsir_weights", "t41_substring_dedup", "d10_allpairs_jaccard",
+      "d13_incremental_admit", "s12_incremental_admit")
     val kept = spark.sparkContext.getPersistentRDDs.keySet
     val before = families.map(q => q -> rows(s, q)).toMap
     // drop the blocks this session's memos hold — executor loss or a

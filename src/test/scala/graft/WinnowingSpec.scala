@@ -258,7 +258,7 @@ class WinnowingSpec extends AnyFunSuite {
       inc.write.mode("append").parquet(s"$d/documents.parquet")
       Winnowing.appendFingerprintIndex(spark, d, inc, prevSig)
       assert(Winnowing.fingerprintStamp(spark, d)
-        .contains(graft.lake.CorpusIndexCache.signature(
+        .contains(graft.lake.SessionMemo.signature(
           s"$d/documents.parquet")),
         "append did not re-stamp to the grown corpus")
       val servedGrown = rows(Winnowing.queries("t29_winnowing")(spark, d))
