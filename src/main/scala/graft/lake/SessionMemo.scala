@@ -15,8 +15,11 @@ import org.apache.spark.storage.StorageLevel
   *   - CHECKPOINTED (co-order adjacency, g1 edges, LPA and refined
   *     labels, component labelings, k-means assignment, DSIR features,
   *     substring occurrences, shingle sets, BPE state and stream, media
-  *     phashes): the value's lineage is truncated by a `localCheckpoint`,
-  *     so no plan under it can dangle;
+  *     phashes, and three whole query results — d10's sorted pairs,
+  *     t41's sorted cut digests and t42's sorted weights, each the last
+  *     relation of its query that depends on the corpus alone): the
+  *     value's lineage is truncated by a `localCheckpoint`, so no plan
+  *     under it can dangle;
   *   - PERSISTED (the per-corpus indexes: LSH bucket table, float and
   *     int8 scoring indexes, labeled bucket table, s12 admission and d13
   *     band indexes): the value is `persist`ed MEMORY_AND_DISK (an
@@ -58,6 +61,17 @@ final class SessionMemo[K, V](frames: V => Seq[DataFrame],
     */
   private[graft] val builds = new AtomicLong
 
+  /** Values served without a build. */
+  private[graft] val hits = new AtomicLong
+
+  /** Builds of an entry whose signature still matched but whose
+    * checkpoint blocks were gone (counted in [[builds]] too).
+    */
+  private[graft] val lostRebuilds = new AtomicLong
+
+  /** Entries dropped by [[SessionMemo.invalidateAll]]. */
+  private[graft] val evictions = new AtomicLong
+
   if (persisted) SessionMemo.persistedMemos.add(this)
 
   /** The value for (s, k), built when absent, stale against `sig`, or
@@ -66,9 +80,12 @@ final class SessionMemo[K, V](frames: V => Seq[DataFrame],
   def apply(s: SparkSession, k: K, sig: String)(build: => V): V = {
     sweep()
     entries.compute((s, k), (_, cur) =>
-      if (cur != null && cur._1 == sig && SessionMemo.live(frames(cur._2))) cur
-      else {
+      if (cur != null && cur._1 == sig && SessionMemo.live(frames(cur._2))) {
+        hits.incrementAndGet()
+        cur
+      } else {
         if (cur != null) release(cur._2)
+        if (cur != null && cur._1 == sig) lostRebuilds.incrementAndGet()
         builds.incrementAndGet()
         val v = build
         if (persisted) frames(v).foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
@@ -82,7 +99,9 @@ final class SessionMemo[K, V](frames: V => Seq[DataFrame],
   def hit(s: SparkSession, k: K, sig: String): Option[V] = {
     sweep()
     Option(entries.get((s, k))).collect {
-      case (`sig`, v) if SessionMemo.live(frames(v)) => v
+      case (`sig`, v) if SessionMemo.live(frames(v)) =>
+        hits.incrementAndGet()
+        v
     }
   }
 
@@ -101,7 +120,10 @@ final class SessionMemo[K, V](frames: V => Seq[DataFrame],
   private def evict(k: Any): Unit =
     entries.entrySet.removeIf { e =>
       val hit = e.getKey._2 == k
-      if (hit) release(e.getValue._2)
+      if (hit) {
+        release(e.getValue._2)
+        evictions.incrementAndGet()
+      }
       hit
     }
 
@@ -140,6 +162,9 @@ object SessionMemo {
   sealed abstract class ByPath(persisted: Boolean) {
     private val memo = new SessionMemo[String, DataFrame](Seq(_), persisted)
     private[graft] def builds: AtomicLong = memo.builds
+    private[graft] def hits: AtomicLong = memo.hits
+    private[graft] def lostRebuilds: AtomicLong = memo.lostRebuilds
+    private[graft] def evictions: AtomicLong = memo.evictions
     def apply(s: SparkSession, path: String)(build: => DataFrame): DataFrame =
       memo(s, path, signature(path))(
         if (persisted) build else build.localCheckpoint())

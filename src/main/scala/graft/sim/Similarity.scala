@@ -883,9 +883,10 @@ object Similarity {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** s3 residual-bexp adjudication counts (r10; the D12Diag template
-    * applied to the one scale flag the r9 verdict left on claimed
-    * evidence): for one tier, the row counts at each grain of the
+  /** s3 residual-bexp adjudication counts (r10; the grain-count method
+    * of the r9 d12 diagnosis, D12_DIAG_R9.json, applied to the one
+    * scale flag the r9 verdict left on claimed evidence): for one
+    * tier, the row counts at each grain of the
     * SHIPPED fused pipeline —
     *
     *   - `collisions`: in-bucket ordered pairs out of the self-join

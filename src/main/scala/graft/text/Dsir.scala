@@ -97,21 +97,24 @@ object Dsir {
     */
   private def scoringState(s: SparkSession,
       d: String): (DataFrame, DataFrame) =
-    servedCounts(s, d) match {
-      case Some(c) =>
-        (features(documents(s, d).filter(col("lang") =!= TargetLang)), c)
-      case None =>
-        val ff = flaggedCorpusFeatures(s, d)
-        (ff.filter(!col("tgt")).select("doc_id", "f"),
-          countsFromFlagged(ff))
-    }
+    servedCounts(s, d).fold(coldState(s, d))(servedState(s, d, _))
+
+  private def servedState(s: SparkSession, d: String,
+      c: DataFrame): (DataFrame, DataFrame) =
+    (features(documents(s, d).filter(col("lang") =!= TargetLang)), c)
+
+  private def coldState(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ff = flaggedCorpusFeatures(s, d)
+    (ff.filter(!col("tgt")).select("doc_id", "f"), countsFromFlagged(ff))
+  }
 
   /** Memoized per-(session, tier) cold [[flaggedFeatures]] checkpoint
-    * — the coAdj/lpaStates lifecycle (r18): t42/t43/t45/t46 and the
-    * admission stream each re-ran the corpus bigram pass per
-    * invocation when no `dsir` table serves. Bit-identical on a hit
-    * (content-hashed features off a deterministic corpus); the served
-    * path is consulted first by every caller.
+    * — the coAdj/lpaStates lifecycle (r18): t43/t45/t46, the admission
+    * stream and the rebuild of t42's [[weightsMemo]] entry each re-ran
+    * the corpus bigram pass per invocation when no `dsir` table serves.
+    * Bit-identical on a hit (content-hashed features off a
+    * deterministic corpus); the served path is consulted first by
+    * every caller.
     */
   private val ffMemo = new graft.lake.SessionMemo.Checkpointed
   private def flaggedCorpusFeatures(s: SparkSession, d: String): DataFrame =
@@ -247,9 +250,6 @@ object Dsir {
     * inline aggregate; the derivation arithmetic is shared
     * ([[ratiosFromCounts]]) so the two paths cannot drift.
     */
-  private def weights(s: SparkSession, d: String): DataFrame =
-    weightsFrom(scoringState(s, d))
-
   private def weightsFrom(st: (DataFrame, DataFrame)): DataFrame = {
     val (rawFeats, c) = st
     rawFeats
@@ -260,9 +260,19 @@ object Dsir {
         expr("sr div n_feats").as("score_ppm"))
   }
 
-  /** t42: the importance weights, auditable per doc. */
+  /** t42: the importance weights, auditable per doc. A fresh `dsir`
+    * table is probed first and scored against on every call; without
+    * one the sorted weights depend on the corpus alone and are memoized
+    * whole, so a repeat call reads one checkpoint.
+    */
   def t42DsirWeights(s: SparkSession, d: String): DataFrame =
-    weights(s, d).orderBy("doc_id")
+    servedCounts(s, d) match {
+      case Some(c) => weightsFrom(servedState(s, d, c)).orderBy("doc_id")
+      case None =>
+        weightsMemo(s, d)(weightsFrom(coldState(s, d)).orderBy("doc_id"))
+    }
+
+  private[graft] val weightsMemo = new graft.lake.SessionMemo.Checkpointed
 
   /** t43: the resample — keep a raw-pool doc iff its content-keyed
     * coin (h60(text) mod 10⁶) lands under min(score_ppm, 10⁶):

@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * OUTPUT-bounded? Prints, per tier, the grain counts of the shipped
   * pipeline ([[graft.sim.Similarity.s3DiagCounts]]): in-bucket
   * collisions, threshold survivors (= the only pair-grain exchange's
-  * input), and distinct output pairs. The D12Diag methodology: if the
-  * survivor relation grows at ≥ the byte exponent, the residual is the
-  * answer set's own growth, not filter degradation.
+  * input), and distinct output pairs. The r9 d12 method
+  * (D12_DIAG_R9.json): if the survivor relation grows at ≥ the byte
+  * exponent, the residual is the answer set's own growth, not filter
+  * degradation.
   *
   *   sbt "runMain graft.tools.S3Diag /root/testdata/sf0.1 /tmp/graft_sf1 /tmp/graft_sf10"
   */

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * default of 100 entries, a mix that generates more classes than that
   * evicts each class before it is reused, and every repeat of the mix
   * compiles again. The mix below generates about 250 distinct classes
-  * here (sf0.001). `a10_multi_distinct` stays out of it: the order of
-  * its two distinct-aggregate groups in Spark's `Expand` changes between
-  * analyses of the same query, so a call can generate the other of two
-  * code variants however large the cache is.
+  * here (sf0.001). The second case pins `a10_multi_distinct`, whose
+  * plan once depended on the order Spark's distinct-aggregate rewrite
+  * chose for its two distinct groups, and that order changed between
+  * analyses of the same query.
   */
 class CodegenCacheSpec extends AnyFunSuite {
   import TestSpark._
@@ -24,6 +24,18 @@ class CodegenCacheSpec extends AnyFunSuite {
     val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     mix.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("a10_multi_distinct compiles nothing after its first analysis") {
+    def run(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries("a10_multi_distinct")(spark, sf).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    run()
+    val again = (1 to 8).map(_ => run())
+    assert(again.forall(_ == 0),
+      s"fresh analyses of a10 compiled ${again.mkString(", ")} classes")
   }
 
   test("a repeated query mix of > 100 generated classes compiles nothing the second time") {

@@ -347,8 +347,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // the exact set-similarity join must never go all-pairs: candidates
     // come from the PREFIX self-join only (both sides the same subplan —
     // one exchange, reused), verification joins candidate ids back to
-    // the hashed sets. Exchange count is fixed as data grows.
-    val df = graft.text.SetSimilarity.d10AllPairsJaccard(spark, sf)
+    // the hashed sets. Exchange count is fixed as data grows. The query
+    // serves a memoized checkpoint of this relation, so the audit reads
+    // the relation its memo builds.
+    val df = graft.text.SetSimilarity.allPairs(
+      graft.lake.Tables.documents(spark, sf))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("reused"),
