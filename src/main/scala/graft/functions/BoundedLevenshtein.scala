@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * stages (f_edit_distance) call this once per CANDIDATE PAIR — the
   * hot loop of the whole operator — and Spark's kernel fills the DP
   * band over the full strings every call. Two classical cuts make it
-  * ~3.5× faster on linkage-shaped data (measured via
-  * `tools/LevDiag` at sf0.1: 11.3 s full / 6.3 s banded built-in /
-  * 3.2 s this kernel for the same blocked self-join):
+  * ~3.5× faster on linkage-shaped data (measured at sf0.1: 11.3 s
+  * full / 6.3 s banded built-in / 3.2 s this kernel for the same
+  * blocked self-join):
   *
   *   1. common prefix/suffix stripping — `lev(Pa, Pb) = lev(a, b)`:
   *      entity names in one block share long constant heads

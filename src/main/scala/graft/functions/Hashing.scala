@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * whole-stage codegen keeps it in the scan stage), so dedup stays
   * scan-bound. The production swap is a first-class code path: the
   * dedup cores take a [[HashFamily]] and [[xxFamily]] is the xxhash64
-  * instance (recall-equivalence tested in LlmPipelineSpec, timed by
-  * tools/HashBench).
+  * instance (recall-equivalence tested in LlmPipelineSpec).
   */
 object Hashing {
 
@@ -67,7 +66,7 @@ object Hashing {
     * 32-/60-bit ranges as the md5 forms (so the minhash universal-hash
     * arithmetic stays overflow-free). Spark-native and ~10× cheaper per
     * byte than md5, but NOT reproducible in DuckDB — use it on runs
-    * without the cross-engine gate. Measured (tools/HashBench, sf0.1):
+    * without the cross-engine gate. Measured (sf0.1):
     * d2 candidate pipeline 2.45 s → 2.09 s (1.17×) — modest here
     * because the testdata docs are short and the pipeline is
     * explode/agg/join-bound; the hash's share grows linearly with

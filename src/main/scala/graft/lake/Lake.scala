@@ -402,26 +402,46 @@ object Lake {
     *    the offline sandbox has none (PROGRESS.md round-4 adjudication).
     */
   def upsertByKey(spark: SparkSession, increment: DataFrame, path: String,
-      key: String): Unit = {
+      key: String): Unit =
+    stageUpsert(spark, increment, path, key,
+      dup => s"upsertByKey: increment has duplicate key '$key' = $dup; " +
+        "dedup the increment first (e.g. latest-per-key) — which row wins " +
+        "is the caller's business rule, not this function's",
+      guard = () => ()) match {
+      case Some(tmp) => swapInto(spark, tmp, path)
+      case None => increment.write.option("compression", "snappy").parquet(path)
+    }
+
+  /** The rewrite body of [[upsertByKey]] and [[commitUpsert]]: refuse a
+    * key-duplicated increment (`duplicate` words the message from the
+    * offending key), run `guard`, then stage the rewritten store —
+    * existing rows minus the increment's keys, plus the increment — in
+    * `<path>_upserting`. Returns the staging dir, or None when no store
+    * exists at `path` yet and the caller writes the increment there.
+    *
+    * The duplicate check stays its own pass over the increment: folding
+    * it into the anti-join's key-side aggregate is unsound, because the
+    * optimizer infers `isnotnull(key)` on that side, so two null-key rows
+    * would pass.
+    */
+  private def stageUpsert(spark: SparkSession, increment: DataFrame,
+      path: String, key: String, duplicate: Any => String,
+      guard: () => Unit): Option[String] = {
     val dup = increment.groupBy(key).count()
       .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"upsertByKey: increment has duplicate key '$key' = ${dup.head.get(0)}; " +
-        "dedup the increment first (e.g. latest-per-key) — which row wins " +
-        "is the caller's business rule, not this function's")
+    require(dup.isEmpty, duplicate(dup.head.get(0)))
+    guard()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
-      increment.write.option("compression", "snappy").parquet(path)
-      return
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
+    else {
+      val tmp = path.stripSuffix("/") + "_upserting"
+      spark.read.parquet(path)
+        .join(increment.select(key).distinct(), Seq(key), "left_anti")
+        .unionByName(increment)
+        .write.mode("overwrite").option("compression", "snappy").parquet(tmp)
+      Some(tmp)
     }
-    val existing = spark.read.parquet(path)
-    val tmp = path.stripSuffix("/") + "_upserting"
-    existing
-      .join(increment.select(key).distinct(), Seq(key), "left_anti")
-      .unionByName(increment)
-      .write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-    swapInto(spark, tmp, path)
   }
 
   // ------------------------------------------- optimistic commit guard
@@ -645,10 +665,6 @@ object Lake {
       increment: DataFrame, path: String, key: String,
       expected: Option[String], beforeSwap: () => Unit,
       beforeIntent: () => Unit = () => ()): Unit = {
-    val dup = increment.groupBy(key).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"commitUpsert: increment has duplicate key '$key' = ${dup.head.get(0)}")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def recheck(): Unit = {
@@ -672,20 +688,18 @@ object Lake {
             "during the rewrite — a concurrent writer committed; retry " +
             "from a fresh read")
     }
-    recheck() // early: refuse before clobbering a crashed winner's staging
+    val staged = stageUpsert(spark, increment, path, key,
+      dup => s"commitUpsert: increment has duplicate key '$key' = $dup",
+      // early: refuse before clobbering a crashed winner's staging
+      guard = () => recheck())
     val token = java.util.UUID.randomUUID().toString
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+    if (staged.isEmpty) {
       recheck() // a guarded writer may have created the store just now
       increment.write.option("compression", "snappy").parquet(path)
       writeCommitStamp(spark, path, token)
       return
     }
-    val existing = spark.read.parquet(path)
-    val tmp = path.stripSuffix("/") + "_upserting"
-    existing
-      .join(increment.select(key).distinct(), Seq(key), "left_anti")
-      .unionByName(increment)
-      .write.mode("overwrite").option("compression", "snappy").parquet(tmp)
+    val tmp = staged.get
     try recheck()
     catch {
       case e: java.util.ConcurrentModificationException =>

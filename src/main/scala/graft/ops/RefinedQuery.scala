@@ -13,10 +13,18 @@ import org.apache.spark.sql.functions._
   *     deterministic tie-break (the as-written query's LIMIT 5 is
   *     tie-ambiguous; the DSL form adds key ordering for reproducibility).
   *
-  * Physical shape (both forms): partial+final HashAggregate on
-  * (cod, acao) → TakeOrderedAndProject top-5. One shuffle; the top-5 never
-  * global-sorts. At 100 TB the aggregate is the only exchange, and AQE
-  * coalesces its output partitions.
+  * Physical shape of [[refinedDsl]], collected or written to a path
+  * partitioned by (acao, created_at) through `Lake.writeRefined`:
+  * partial+final HashAggregate on (cod, acao) → TakeOrderedAndProject
+  * top-5 → write. One shuffle; the top-5 never global-sorts. At 100 TB
+  * the aggregate is the only exchange, and AQE coalesces its output
+  * partitions. Two writes still range-partition and globally sort every
+  * group, because a projection lands between their Limit and Sort (see
+  * [[refinedDsl]]):
+  *   - [[refinedSql]] (used only in tests; its SQL text is Glue's,
+  *     verbatim) written partitioned by `acao`: it stamps after the LIMIT;
+  *   - `writeRefined`'s catalog arm: the table keeps its partition
+  *     columns last, so the write reorders the batch's columns.
   */
 object RefinedQuery {
 
@@ -67,8 +75,17 @@ object RefinedQuery {
         .between(date_sub(current_date(), 7), current_date()))
       .groupBy("cod", "acao")
       .agg(sum("qtde_teorica").as("total_qtde_teorica_dos_ultimos_7_dias"))
+      // Stamp before the sort, not after the limit: `gsNow()` is constant
+      // within a query, so the rows are the same either way. But
+      // `Lake.writeRefined` partitions by the nullable string `acao`, so
+      // the planned write puts an `empty2null(acao)` projection on top of
+      // the query, and the optimizer pushes it below the Limit. Stamped
+      // after `.limit(5)`, the stamp's projection is pushed there too:
+      // two projections between Limit and Sort, which the planner cannot
+      // match to TakeOrderedAndProject, so the write range-partitions and
+      // fully sorts every (cod, acao) group to keep 5 rows.
+      .withColumn("created_at", gsNow())
       .orderBy(desc("total_qtde_teorica_dos_ultimos_7_dias"),
         asc("cod"), asc("acao"))
       .limit(5)
-      .withColumn("created_at", gsNow())
 }

@@ -269,7 +269,7 @@ object CoreQueries {
     w6RangeRolling(s, d, mapSideCombine = false)
 
   /** The form choice, exposed (r5 verdict #8): `mapSideCombine = false`
-    * (what ships — W6Compare measured 1.30 vs 1.73 s at sf0.1) plans the
+    * (what ships — measured 1.30 vs 1.73 s at sf0.1) plans the
     * one-exchange repartition form; `true` plans the plain groupBy —
     * two exchanges, but the first carries combiner-reduced (supp, day)
     * partials. Pick by expected rows per (supplier, day): below ~4 the

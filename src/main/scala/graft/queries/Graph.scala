@@ -269,7 +269,7 @@ object Graph {
     * iteration-5 exactly against a plain-Scala reference, so the count
     * is a contract, not a tuning knob).
     *
-    * MASS GRAIN (fixed in r10, found by tools/G1Invariant at the sf10
+    * MASS GRAIN (fixed in r10, found by a mass-invariant check at the sf10
     * tier): ranks are micro-units of a UNIFORM NODE's mass — r₀ =
     * 1,000,000 each, total mass 1e6·N — not millionths of the whole
     * graph. The original graph-PPM grain (r₀ = 1e6 div N) integer-
@@ -343,8 +343,8 @@ object Graph {
     * |edges|+|rank| to |rank| only (the node-sized rank vector aligns
     * to the buckets; the dst-keyed aggregation exchange is inherent —
     * it re-keys). BucketedG1Spec asserts the plan (edge scan feeds the
-    * join with zero intervening Exchange, `Bucketed: true`) and
-    * tools/G1Bucketed measures the per-iteration shuffle-byte drop.
+    * join with zero intervening Exchange, `Bucketed: true`); the
+    * point is the per-iteration shuffle-byte drop.
     * Results are bit-identical to [[g1Pagerank]] (same iterate, same
     * integer arithmetic — spec-pinned).
     */

@@ -445,40 +445,12 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         expr(s"sqrt(${dotSql("embedding", "embedding")})").as("nrm"))
 
-  /** The both-directions scoring form [[s2Scored]] replaced: every
-    * ordered candidate pair scored independently — each cosine computed
-    * TWICE. Kept for AnnCompare's regression comparison (measured
-    * 2.11 s vs the symmetric form's 1.64 s at sf0.1).
-    */
-  private[graft] def s2ScoredDual(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.ensureRegistered(s)
-    val bt = bucketTable(s, d)
-    val a = bt.as("a")
-    val c = bt.as("c").hint("shuffle_hash")
-    // shuffle_hash on both sides -> identical exchanges -> ReuseExchange
-    // computes the bucket projection once (broadcast is impossible at
-    // corpus scale anyway); dropDuplicates collapses multi-table
-    // collisions BEFORE scoring so each pair is scored once
-    val cand = a.join(c,
-        col("a.tbl") === col("c.tbl") && col("a.bk") === col("c.bk") &&
-          col("a.vec_id") =!= col("c.vec_id"))
-      .select(col("a.vec_id").as("q_id"), col("c.vec_id").as("n_id"))
-      .dropDuplicates("q_id", "n_id")
-    val e = normedEmbeddings(s, d)
-    cand
-      .join(e.as("eq"), col("q_id") === col("eq.vec_id"))
-      .join(e.as("en"), col("n_id") === col("en.vec_id"))
-      .withColumn("cos_exact",
-        expr(dotSql("eq.embedding", "en.embedding")) /
-          (col("eq.nrm") * col("en.nrm")))
-  }
-
   /** s2: LSH-bucketed approximate top-3 neighbors for EVERY vector —
     * the shape that survives 100× scale-up (bucket equi-join; exact
     * cosine only within buckets).
     *
     * Shipped shape (r9, score-in-join): the r9 skew re-diagnosis
-    * (tools/AnnSkewDiag) measured candidate-PAIR volume growing at the
+    * measured candidate-PAIR volume growing at the
     * uniform-occupancy model's rate (×12.3 for the ×10 sf1→sf10 step;
     * occupancy skew inflates Σc² by a roughly scale-CONSTANT ~1.4×) —
     * the recorded byte superlinearity (bexp 1.62) was NOT pair growth
@@ -503,7 +475,7 @@ object Similarity {
     * that measured sf1→sf10 base 4.4 → 8.4 s and bytes 13.3 → 33.6 GB
     * (SCALE10TO100_S2Q.json) vs the float joins they replace. The
     * pruned form is retained with its equivalence spec as the
-    * adjudicated variant, AnnCompare-style.
+    * adjudicated variant.
     *
     * Output-identical to [[s2AnnLshJoined]] (spec-pinned): same dot
     * fold, same tie-break, dedup by exact-duplicate tuples only.
@@ -540,9 +512,9 @@ object Similarity {
 
   /** The r8-shipped join-then-rank form of [[s2AnnLsh]]: id-only
     * candidate pairs, `dropDuplicates`, two float-index joins, window
-    * rank. Retained as the fused form's equivalence baseline and
-    * AnnCompare variant — at the 100× tier its pair-grain exchanges
-    * are the measured bottleneck (SCALE10TO100_ANN.json bexp 1.62).
+    * rank. Retained as the fused form's equivalence baseline — at the
+    * 100× tier its pair-grain exchanges are the measured bottleneck
+    * (SCALE10TO100_ANN.json bexp 1.62).
     */
   private[graft] def s2AnnLshJoined(s: SparkSession, d: String): DataFrame =
     rankTop3(s2Scored(s, d))
@@ -709,9 +681,9 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("cos_exact"))
   }
 
-  /** s2's ranking contract — ONE place (AnnCompare ranks the dual
-    * scored form through the same code, so a tie-break/rounding change
-    * can't silently diverge the regression comparison).
+  /** s2's ranking contract — ONE place (the equivalence baselines and
+    * the PQ forms rank through the same code, so a tie-break/rounding
+    * change can't silently diverge them).
     */
   private[graft] def rankTop3(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id")
@@ -731,8 +703,8 @@ object Similarity {
     * directions emitted by an explode — cos(a,b) ≡ cos(b,a)
     * bit-for-bit (same index order in the fold), so this is
     * output-identical to scoring both directions at half the dot
-    * products (AnnCompare: 1.64 s vs 2.11 s at sf0.1). Shared by the
-    * two s2 ranking forms.
+    * products (measured 1.64 s vs 2.11 s at sf0.1). The input of
+    * [[s2AnnLshJoined]].
     */
   private[graft] def s2Scored(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.ensureRegistered(s)
@@ -758,31 +730,6 @@ object Similarity {
       .select(col("p.q_id"), col("p.n_id"), col("cos_exact"))
   }
 
-
-  /** The partial-aggregable ranking form of [[s2AnnLsh]]: the typed
-    * top-k aggregator collapses each map task's candidates to ≤ 3 per
-    * query BEFORE the shuffle, where the window form shuffles the whole
-    * scored candidate stream to sort it. Same output, same tie-break
-    * (cos desc, n_id asc). See AnnCompare for the measured trade —
-    * the typed path leaves whole-stage codegen (encoder per row), so
-    * which form wins depends on candidate volume per task.
-    */
-  private[graft] def s2AnnLshAgg(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val topk = new graft.functions.TopKAggregator(3).toColumn
-    s2Scored(s, d)
-      .select(col("q_id"), col("cos_exact"), col("n_id"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, cos, n) => (cos, n) }
-      .agg(topk.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("q_id"), col("item._2").as("n_id"),
-        round(col("item._1"), 4).as("cos"),
-        (col("pos") + 1).cast("int").as("rank"))
-      .orderBy("q_id", "rank")
-  }
 
   /** LSH candidate id pairs (id_a < id_b), deduped across tables —
     * shared by the s2 and s3 forms.
@@ -883,45 +830,11 @@ object Similarity {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** s3 residual-bexp adjudication counts (r10; the grain-count method
-    * of the r9 d12 diagnosis, D12_DIAG_R9.json, applied to the one
-    * scale flag the r9 verdict left on claimed evidence): for one
-    * tier, the row counts at each grain of the
-    * SHIPPED fused pipeline —
-    *
-    *   - `collisions`: in-bucket ordered pairs out of the self-join
-    *     (scored in-projection; never shuffled at this grain)
-    *   - `survivors`: rows PASSING the cos ≥ 0.30 filter, i.e. the
-    *     input of the only pair-grain exchange left (the survivor
-    *     `dropDuplicates`) — the relation whose growth IS the byte law
-    *   - `out_pairs`: distinct output pairs
-    *
-    * If `survivors` grows across tiers at an exponent ≥ the measured
-    * shuffle-byte exponent (1.31 at 100×, SCALE100_SELF.json), the
-    * residual is the answer set's own growth — output-law-bounded like
-    * d12 — and not filter or plan degradation. Counts share every
-    * expression with [[s3EmbeddingNeardup]] verbatim.
-    */
-  private[graft] def s3DiagCounts(s: SparkSession, d: String): String = {
-    VectorExpressions.ensureRegistered(s)
-    val bi = floatBucketIndex(s, d)
-    val a = bi.as("a")
-    val c = bi.as("c").hint("shuffle_hash")
-    val scored = a.join(c,
-        col("a.tbl") === col("c.tbl") && col("a.bk") === col("c.bk") &&
-          col("a.vec_id") < col("c.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("c.vec_id").as("vec_b"),
-        round(expr(dotSql("a.embedding", "c.embedding")) /
-          (col("a.nrm") * col("c.nrm")), 4).as("cos"))
-    val survivors = scored.filter(col("cos") >= 0.30).localCheckpoint()
-    s""""collisions":${scored.count()},"survivors":${survivors.count()},""" +
-      s""""out_pairs":${survivors.dropDuplicates("vec_a", "vec_b").count()}"""
-  }
-
   /** The r9 interim join-then-prefilter form: id-only candidate pairs
     * dedup'd at CANDIDATE grain, then two int8-index joins, then the
-    * sound-bounded prefilter. Retained as an AnnCompare variant — its
-    * pair-grain index joins are what the fused shipped form removes.
+    * sound-bounded prefilter. Retained as the fused form's equivalence
+    * baseline — its pair-grain index joins are what the fused shipped
+    * form removes.
     */
   private[graft] def s3EmbeddingNeardupJoined(s: SparkSession, d: String): DataFrame = {
     VectorExpressions.ensureRegistered(s)

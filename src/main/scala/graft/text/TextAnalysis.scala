@@ -265,8 +265,7 @@ object TextAnalysis {
   /** The shared payload step over a pack assignment (t17/t36).
     *
     * Byte-law adjudication (SCALE_NEW_R14_10to100 read bexp ~1.19 for
-    * both payload queries): tools/PackBytesDiag decomposed the legs —
-    * the slim assignment is exactly linear (0.9 → 9.4 MB at 10×), and
+    * both payload queries), decomposed by leg: the slim assignment is exactly linear (0.9 → 9.4 MB at 10×), and
     * the jump is the text join's assignment side crossing the 10 MB
     * auto-broadcast threshold between the tiers (join leg 0.9 MB
     * broadcast at sf1 → 193 MB shuffled at sf10), i.e. the one-time

@@ -88,8 +88,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // l_suppkey for the window. The repartition(l_suppkey) form gives a
     // partitioning that satisfies both, so the final plan must contain
     // exactly 2 shuffles: the supplier hash exchange + the output
-    // orderBy's range exchange. W6Compare measured 1.30 s vs 1.73 s at
-    // sf0.1 for this shape (PROGRESS r4).
+    // orderBy's range exchange. This shape measured 1.30 s vs 1.73 s at
+    // sf0.1 (PROGRESS r4).
     val df = graft.queries.CoreQueries.w6RangeRolling(spark, sf)
     val n = TestSpark.countShuffles(df) // final AQE plan via noop write
     assert(n == 2,
