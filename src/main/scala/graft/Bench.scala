@@ -1,867 +1,235 @@
 package graft
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract). Emits ONE JSON line with per-query
-  * wall seconds on SPARK_GRAFT_SF_DIR.
+/** Benchmark main: times every `SparkEntry.queries` entry (or the ones
+  * named on the command line) on SPARK_GRAFT_SF_DIR and records, per
+  * query and timed pass, where the time went.
   *
-  * Methodology (VERDICT r1 "What's wrong" #3; r2 #2):
-  *   - action is a `noop`-format write, not `count()` — count() lets
+  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 java ... graft.Bench [q1 q2 ...]
+  *
+  * Run it from a scratch working directory: the record lands there.
+  *
+  * Methodology:
+  *   - the action is a `noop`-format write, not `count()`: count() lets
   *     Catalyst prune every column a query computes but does not
-  *     aggregate, so scalar-function queries would measure scan-only.
-  *     The noop sink materializes every output row end-to-end.
-  *   - one warmup pass over all queries at sf0.001 before timing —
-  *     absorbs session init + whole-stage-codegen compilation + JIT so
-  *     the first timed query isn't 10× inflated.
-  *   - THREE timed passes, per-query MINIMUM reported (r6 verdict #3
-  *     raised it from two: min-of-2 still let a one-sided co-tenant
-  *     drift through — r2's "j1 8.5× regression" measured 0.63 s and
-  *     0.49 s back to back; r6 flagged s5/t18 at +26–28% that
-  *     re-measured clean). The min measures the PLAN's cost; spikes are
-  *     environment. The pass count is recorded in the JSON ("passes").
-  *   - a FOURTH sample for any query whose three timings disagree by >2×
-  *     (r3 verdict #2: the a7/st1/w6 drift cluster got through min-of-2,
-  *     so a query that measured both 0.4 s and 1.4 s gets one more
-  *     sample before its minimum is believed).
-  *   - a "regressions" field diffing this run against the PRIOR round's
-  *     BENCH json (SPARK_GRAFT_PREV_BENCH, else the newest BENCH_r*.json
-  *     in cwd): every shared query whose new minimum exceeds 2× its
-  *     prior value AND drifts >0.3 s absolute is named with its ratio,
-  *     so a cross-round drift gets flagged mechanically instead of
-  *     waiting for the judge — without micro-query jitter tripping it.
-  *   - SELF-ADJUDICATING flags (r17 verdict #2): queries the tripwire
-  *     flags re-time immediately after the durable flush — seconds
-  *     each, BEFORE any served epoch spends budget (r17's three
-  *     spurious flags survived because re-samples were ordered dead
-  *     last and never ran). A flag whose re-sample falls back under
-  *     the threshold moves to "regressions_cleared" (environmental,
-  *     both numbers in the record); every re-sample lands in
-  *     "flag_resamples".
-  *   - a failed query records -1 AND lands in an explicit "errors" list
-  *     instead of silently passing with a bogus timing.
-  *   - "codegen_compiles" carries, per query, the generated classes each
-  *     timed pass compiled for it: a warm pass that compiles again means
-  *     the codegen cache is evicting ([[GraftExtensions]]).
-  *   - a second "graph_served" column (r11 verdict #2) re-times the
-  *     index-served families with their persisted bucketed tables
-  *     serving — the 100 TB production shape — next to the cold
-  *     (rebuild-per-query) numbers in "queries"; the one-time persist
-  *     cost is "graph_persist_sec". parseTimes deliberately never reads
-  *     the served pairs (same key names as the cold ones).
+  *     aggregate, while the noop sink materializes every output row.
+  *   - one warm-up call per query at sf0.01 first. sf0.001 does not run
+  *     the md5/LSH hot loops long enough for C2 to compile them.
+  *   - [[Passes]] timed passes. Pass 1 pays the session-memo builds at
+  *     this tier (cold); later passes hit them (warm). `queries` carries
+  *     each query's minimum wall seconds, -1 when any pass failed.
+  *   - per pass: wall seconds, process CPU seconds (every JVM thread,
+  *     the figure perfbench gates on), generated classes compiled
+  *     ([[GraftExtensions]] sizes the cache so warm passes compile
+  *     nothing), and the engine counts of [[Tally]]: jobs, completed
+  *     stages, task seconds and shuffle MB. The listener bus is drained
+  *     between queries, outside the timers.
+  *   - the served column: the persisted index tables are built once
+  *     (`graph_persist_sec`), the families they serve are re-timed by the
+  *     same timed-pass loop (`graph_served`, `served_per_query`), and the
+  *     tables are dropped.
   *
-  * CRASH DURABILITY + WALL-CLOCK BUDGET (r16 verdict #1 — the driver's
-  * time box expired mid served-column persist and killed the run with
-  * NO parseable record even though the timed passes had completed):
-  *   - the COMPLETE parseable record (files + stdout line) is flushed
-  *     immediately after the timed passes, with the served column
-  *     absent (persist −1); if the served column completes, the record
-  *     is REWRITTEN in place with it — a kill during served work can
-  *     no longer destroy the main result.
-  *   - the run reads a wall-clock budget (first CLI arg, else
-  *     SPARK_GRAFT_BENCH_BUDGET_SEC, else [[DefaultBudgetSec]]) and
-  *     degrades gracefully near it, sacrificing in this order
-  *     (cheapest information last): the 3rd timed pass FIRST (min-of-2
-  *     was the r1–r5 protocol), then the 2nd served epoch, then the
-  *     served column entirely. The [[Ladder]] decisions are pure and
-  *     BenchSpec replays r16's profile through them.
-  *   - RETIRED queries (kept for oracle history, off every recommended
-  *     path — d9 since r16) are timed ONCE in pass 1 instead of every
-  *     pass, buying budget headroom; they are excluded from the
-  *     cross-round tripwire (a single sample would false-flag against
-  *     a min-of-3 prior) and named in the record ("retired").
+  * Writes the full record to BENCH_SELF.json in the working directory and
+  * prints one summary line on stdout.
   */
 object Bench {
-  private def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  val Passes = 3
 
-  /** Default wall-clock budget. The r16 driver kill landed somewhere
-    * past ~1300 s of run time (3 passes + warmup ≈ 1000–1250 s at the
-    * driver tier, death mid epoch-1 persists) — consistent with an
-    * 1800 s box. 1650 admits 3 passes + 1 served epoch + the extra
-    * samples on an idle machine (~1480 s by the r17 measured profile)
-    * while leaving ≥ 150 s under an 1800 s kill for JVM startup and
-    * the final flush; a tighter actual box degrades through the
-    * ladder and still flushes a complete record.
-    */
-  private[graft] val DefaultBudgetSec = 1650.0
-
-  /** Queries retired from the recommended path but kept for oracle
-    * history (d9: the span-10 tiled screen, retired from the cut path
-    * by the r16 D9_VS_T41 measurement). Timed once, pass 1 only.
-    */
-  private[graft] val Retired: Set[String] = Set("d9_substring_dedup")
-
-  /** The served-column query names — the families the second bench
-    * column re-times off their persisted index tables.
-    */
-  private def servedNames: Set[String] =
-    (graft.queries.Graph.queries ++ graft.text.Winnowing.queries ++
-      graft.text.SubstringDedup.queries ++ graft.text.Dsir.queries ++
-      graft.mm.Multimodal.queries).keySet
-
-  /** Pre-measurement cost estimate of ONE served epoch, from a timed
-    * pass's per-query seconds: an epoch is two passes over the served
-    * family plus the six index persists — the persists are roughly
-    * half a served pass (r15 measured persist 10 s vs served-sum 60 s;
-    * the r16 families added the bpe-stream encode and mm decode), so
-    * 2.5 × served-sum + 30 s slack. Only the admission of epoch 1 and
-    * the pass-3 reserve use this; epoch 2 is gated on epoch 1's
-    * MEASURED cost.
-    */
-  private[graft] def epochEstimate(passTimes: Map[String, Double],
-      served: Set[String] = servedNames): Double = {
-    val servedSum = passTimes.collect {
-      case (n, v) if served(n) && v > 0 => v
-    }.sum
-    2.5 * servedSum + 30.0
+  /** Engine counts accumulated over completed jobs and stages. */
+  final case class Counts(jobs: Long, stages: Long, taskMs: Long,
+      shuffleRead: Long, shuffleWrite: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      taskMs - o.taskMs, shuffleRead - o.shuffleRead,
+      shuffleWrite - o.shuffleWrite)
+    def shuffleBytes: Long = shuffleRead + shuffleWrite
   }
 
-  /** The budget ladder's decision rules — pure, so BenchSpec can replay
-    * a round's timing profile through them. `slack` reserves room for
-    * the final flush + session stop under the kill boundary.
-    * Sacrifice order (r16 verdict #1): pass 3 goes before served
-    * epoch 1 (hence runPass3 ALSO reserves one epoch), epoch 2 before
-    * epoch 1, and the served column is skipped only when nothing fits.
+  /** The listener behind [[Counts]], shared by Bench, ScaleBench and
+    * StreamScale. Spark delivers events asynchronously, so read it after
+    * [[quiesce]].
     */
-  private[graft] case class Ladder(budget: Double, slack: Double = 45.0) {
-    def runPass2(elapsed: Double, estPass: Double): Boolean =
-      elapsed + 1.1 * estPass + slack <= budget
-    def runPass3(elapsed: Double, estPass: Double, estEpoch: Double): Boolean =
-      elapsed + 1.1 * estPass + estEpoch + slack <= budget
-    def runEpoch(elapsed: Double, estEpoch: Double): Boolean =
-      elapsed + 1.1 * estEpoch + slack <= budget
-  }
-
-  /** 1-minute load average off /proc/loadavg — the co-tenant witness
-    * (r15 verdict #6: two rounds spent an adjudication essay proving a
-    * +16% drift was an external load wave; the record now carries the
-    * evidence). None off-Linux or on read failure — never fails the
-    * bench.
-    */
-  private[graft] def load1(): Option[Double] =
-    try Some(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-      .split("\\s+")(0).toDouble)
-    catch { case _: Throwable => None }
-
-  /** Whether the sampled load says the run was contended by OUTSIDE
-    * work. loadavg cannot separate the bench's own threads from
-    * co-tenants mid-run, but three signals are attributable: the
-    * PRE-WARMUP sample (the bench has run nothing yet — anything
-    * there is external or the just-exited compiler), in-run samples
-    * EXCEEDING the bench's own worker count (own load is bounded by
-    * `cpus`; the excess is someone else's), and — r17 verdict #5 —
-    * a SUSTAINED TAIL WAVE: two consecutive boundary samples above
-    * BOTH cpus/4 and 3× the run's own median in-run level. The
-    * absolute floor alone cannot work — a saturated bench legitimately
-    * runs load ≈ cpus — but a wave that is ALSO 3× the run's typical
-    * level is not the bench changing gear: the r17 wave that produced
-    * three spurious 2× flags read 11.12, 9.72 against a median of
-    * ~2.4 (own range 0.9–5.1 across the whole 3-pass + served run),
-    * above the pre-warmup threshold yet under the old `cpus + 4`
-    * in-run bar and invisible to the mean (3.25). One isolated sample
-    * stays unflagged (a single boundary can catch a co-tenant's exit
-    * spike); two consecutive ≈ 40 s+ of sustained outside load across
-    * exactly the samples whose queries the tripwire would then flag.
-    *
-    * r18 precision fix (declared in OPTIMIZATION_r18.md): the wave leg
-    * additionally requires CORROBORATION from the per-process CPU
-    * witness (`waveCorroborated` = the run saw material EXTERNAL busy
-    * CPU in some interval). The 3×-median bar is relative, so a round
-    * that makes the timed passes much quieter lowers the bar under the
-    * bench's own served-epoch burst — the r18 final record read a
-    * 13.1/12.0 tail against a 3.7 median with max_ext = 0.1 s across
-    * every interval: load the bench's own threads produced, not a
-    * co-tenant (loadavg cannot tell them apart; CPU accounting can).
-    * A genuine outside wave of load ~10 for one 40 s window burns
-    * ~400 s of external CPU — far above the 2 s corroboration bar.
-    * The pre-warmup and excess-over-own-workers legs stand alone
-    * (nothing of the bench's runs before warmup; own load is bounded
-    * by `cpus`). Off-Linux, where the CPU witness is absent, the
-    * caller passes true and the wave leg keeps its conservative bite.
-    */
-  private[graft] def loadFlagged(samples: Seq[Double], cpus: Int,
-      waveCorroborated: Boolean = true): Boolean = {
-    val inRun = samples.drop(1)
-    val waveBar = if (inRun.isEmpty) Double.MaxValue
-      else math.max(cpus / 4.0, 3.0 * inRun.sorted.apply(inRun.size / 2))
-    samples.headOption.exists(_ > cpus / 4.0) ||
-      samples.exists(_ - cpus > 4.0) ||
-      (waveCorroborated &&
-        inRun.sliding(2).exists(w => w.size == 2 && w.forall(_ > waveBar)))
-  }
-
-  // ---- per-process CPU witness (r16 verdict #3) ----------------------
-  // /proc/loadavg has a MEASURED blind spot: the r16 same-code re-run
-  // read 1.384× under a load profile nearly identical to the clean
-  // run's — same-envelope contention (co-tenants competing for the
-  // same 32 workers) never raises loadavg above the bench's own
-  // envelope. The attributable signal is CPU-time accounting: the
-  // bench JVM's own utime+stime (/proc/self/stat) vs the machine's
-  // busy jiffies (/proc/stat) over the same wall interval. Busy CPU
-  // the bench didn't spend is, by construction, someone else's — and
-  // it is exactly what stretches wall time without moving loadavg.
-
-  /** One boundary sample: wall clock + the JVM's own cumulative CPU
-    * jiffies + machine-wide busy/iowait/total jiffies. All counters
-    * are monotone, so interval deltas are exact regardless of when
-    * other processes start or stop.
-    */
-  private[graft] case class CpuSnap(wallNs: Long, ownTicks: Long,
-      busyTicks: Long, totalTicks: Long, iowaitTicks: Long = 0L)
-
-  /** Read a [[CpuSnap]] — None off-Linux or on any parse failure (the
-    * witness must never fail the bench). /proc/self/stat's comm field
-    * may contain spaces, so fields are taken after the closing paren;
-    * utime/stime are fields 14/15 (1-indexed), i.e. 11/12 of the
-    * post-paren split. /proc/stat's cpu line: busy = Σ(user..steal)
-    * − idle − iowait; total = Σ(user..steal) — dividing deltas of the
-    * two cancels the USER_HZ unit, so no HZ assumption is made.
-    * iowait is kept separately: it is in NEITHER own nor busy, and it
-    * is exactly the r17 disaster mode (below).
-    */
-  private[graft] def readCpuSnap(): Option[CpuSnap] =
-    try {
-      val self = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
-      val rest = self.substring(self.lastIndexOf(')') + 2).split("\\s+")
-      val own = rest(11).toLong + rest(12).toLong
-      val cpu = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().split("\\s+").drop(1).take(8).map(_.toLong)
-      val total = cpu.sum
-      val busy = total - cpu(3) - cpu(4) // minus idle, iowait
-      Some(CpuSnap(System.nanoTime(), own, busy, total, cpu(4)))
-    } catch { case _: Throwable => None }
-
-  /** Boundary-to-boundary intervals:
-    * (wallSec, ownCores, externalCores, iowaitCores).
-    * ownCores = the bench JVM's own CPU concurrency over the interval;
-    * externalCores = machine busy minus own — CPU someone else burned
-    * while the bench's queries ran; iowaitCores = cpus idle-but-
-    * waiting-on-disk. All derived as jiffy-delta shares of the
-    * machine-total delta × cpus, so USER_HZ cancels.
-    */
-  /** USER_HZ — universal 100 on Linux x86 (verified live on this
-    * machine: 99.9 measured ticks/sec/cpu); only the unaccounted-wall
-    * ratio depends on it, the core shares cancel it.
-    */
-  private val UserHz = 100.0
-
-  private[graft] def cpuIntervals(snaps: Seq[CpuSnap],
-      cpus: Int): Seq[(Double, Double, Double, Double, Double)] =
-    snaps.sliding(2).collect {
-      // sub-half-second intervals (back-to-back boundaries) carry no
-      // signal and would only pad the record
-      case Seq(a, b) if b.totalTicks > a.totalTicks &&
-          b.wallNs - a.wallNs >= 500000000L =>
-        val wall = (b.wallNs - a.wallNs) / 1e9
-        val share = cpus.toDouble / (b.totalTicks - a.totalTicks)
-        val own = (b.ownTicks - a.ownTicks) * share
-        val ext = ((b.busyTicks - a.busyTicks) -
-          (b.ownTicks - a.ownTicks)) * share
-        val iow = (b.iowaitTicks - a.iowaitTicks) * share
-        // machine-seconds the kernel ACCOUNTED over the interval — on a
-        // healthy guest ≈ wall; a host-side pause/steal-without-steal-
-        // accounting freezes the jiffy counters while the guest clock
-        // keeps running, so acct ≪ wall
-        val acct = (b.totalTicks - a.totalTicks) / (cpus * UserHz)
-        (wall, own, math.max(ext, 0.0), math.max(iow, 0.0), acct)
-    }.toSeq
-
-  /** The contention flags: any interval of ≥ 1 s where external
-    * processes sustained more than [[ExternalCoresFlag]] cores (the
-    * r16 same-envelope blind spot — calibrated to the documented
-    * r13–r16 wave amplitudes of 4–16 cores), OR where the machine sat
-    * in iowait past [[IowaitCoresFlag]] cores — the r17 DISASTER MODE:
-    * a third idle bench run measured one 25-query stretch at 623 s
-    * wall with own ≈ 3 and external ≈ 0.4 cores and BOTH witnesses
-    * silent, because a storage-throttling stall (hours of heavy disk
-    * use exhausted the volume's burst budget) stretches wall while
-    * burning NO cpu anywhere — iowait is the one counter that sees
-    * threads blocked on disk. A run stalled on I/O is not measuring
-    * the plan no matter whose I/O it is; the driver-read regressions
-    * field must not fire from it (that record carried 56 bogus 2–68×
-    * "regressions" before this flag existed).
-    */
-  private[graft] val ExternalCoresFlag = 4.0
-  private[graft] val IowaitCoresFlag = 2.0
-
-  /** Unaccounted-wall ratio: flag an interval whose wall exceeds 1.5×
-    * the machine-seconds the kernel accounted — the FOURTH r17 stall
-    * mode (one 1110 s interval at own 2.0 / ext 0.1 / iowait 0.0:
-    * neither CPU, disk-wait, nor co-tenant CPU — the guest clock ran
-    * while the jiffy counters barely moved, the signature of a
-    * host-side pause or unaccounted steal).
-    */
-  private[graft] val UnaccountedWallRatio = 1.5
-  private[graft] def cpuFlagged(snaps: Seq[CpuSnap], cpus: Int): Boolean =
-    cpuIntervals(snaps, cpus).exists { case (wall, _, ext, iow, acct) =>
-      wall >= 1.0 && (ext > ExternalCoresFlag || iow > IowaitCoresFlag ||
-        (acct > 0 && wall > UnaccountedWallRatio * acct))
+  final class Tally extends SparkListener {
+    private val jobs, stages, taskMs, read, write = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
     }
-
-  /** The regression-tripwire fields (r15 verdict #6): when the load
-    * witness flags external contention, the per-query regressions move
-    * from the driver-read "regressions" field to
-    * "regressions_under_load" — ANNOTATED, not FIRED — because a
-    * 2×-with-0.3s-drift reading taken inside a co-tenant wave is
-    * evidence about the machine, not the plan (every drift the
-    * tripwire has fired cross-round so far re-measured clean idle).
-    * Returns (regressions, regressions_under_load) JSON objects;
-    * exactly one carries the entries. Retired queries are excluded —
-    * their single sample would false-flag against a min-of-3 prior.
-    */
-  /** The cross-round tripwire predicate — shared by [[regressionFields]]
-    * and the flagged-query re-sample pass (r17 verdict #2) so the two
-    * cannot disagree on what "flagged" means. Significance floor: a
-    * ratio alone flags 0.1 s → 0.25 s jitter on micro-queries; the
-    * ABSOLUTE drift must also clear 0.3 s (r6 verdict #3). Retired
-    * queries excluded — their single sample would false-flag against a
-    * min-of-3 prior.
-    */
-  private[graft] def tripped(name: String, v: Double,
-      p: Map[String, Double]): Boolean =
-    !Retired.contains(name) && v > 0 && p.getOrElse(name, -1.0) > 0 &&
-      v > 2 * p(name) && v - p(name) > 0.3
-
-  /** Queries the tripwire currently flags, sorted. */
-  private[graft] def trippedNames(results: Map[String, Double],
-      prior: Option[(String, Map[String, Double])]): Seq[String] =
-    prior.map { case (_, p) =>
-      results.toSeq.sortBy(_._1).collect {
-        case (n, v) if tripped(n, v, p) => n }
-    }.getOrElse(Seq.empty)
-
-  private[graft] def regressionFields(results: Map[String, Double],
-      prior: Option[(String, Map[String, Double])],
-      flagged: Boolean): (String, String) = prior match {
-    case None => ("{}", "{}")
-    case Some((file, p)) =>
-      val regs = results.toSeq.sortBy(_._1).collect {
-        case (name, v) if tripped(name, v, p) =>
-          f""""$name":${v / p(name)}%.2f"""
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      val m = s.stageInfo.taskMetrics
+      if (m != null) {
+        taskMs.addAndGet(m.executorRunTime)
+        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
-      val body = regs.mkString("{", ",", s""","prior":"$file"}""")
-        .replace("{,", "{")
-      if (flagged) ("{}", body) else (body, "{}")
+    }
+    def counts: Counts =
+      Counts(jobs.get, stages.get, taskMs.get, read.get, write.get)
   }
 
-  /** The cleared-flag annotation (r17 verdict #2): queries that tripped
-    * on the pass minima but whose re-sample fell back under the
-    * threshold — named in the record as ENVIRONMENTAL, with both
-    * numbers, so the judge reads the adjudication from the artifact
-    * instead of cross-referencing idle records and git diffs.
+  /** Wait until no job is active, then give the listener bus a short
+    * drain window; bounds the event bleed between measured runs.
     */
-  private[graft] def clearedJson(flaggedAt: Map[String, Double],
-      results: Map[String, Double],
-      prior: Option[(String, Map[String, Double])]): String =
-    prior match {
-      case None => "{}"
-      case Some((_, p)) =>
-        flaggedAt.toSeq.sortBy(_._1).collect {
-          case (n, was) if !tripped(n, results.getOrElse(n, was), p) =>
-            f""""$n":{"flagged":$was%.3f,"resampled":${results(n)}%.3f}"""
-        }.mkString("{", ",", "}")
-    }
+  def quiesce(spark: SparkSession): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    while (tracker.getActiveJobIds().nonEmpty) Thread.sleep(20)
+    // release prior runs' shuffle/checkpoint files NOW (outside any
+    // timer): the ContextCleaner deletes them only when their
+    // dependencies get GC'd, and a large measurement heap can go many
+    // runs between collections; at the 100x g2 tier the accumulated
+    // spill of 8 interleaved runs filled the disk before any single
+    // run's working set would have.
+    System.gc()
+    Thread.sleep(150)
+  }
 
   /** Generated classes Spark has compiled in this JVM so far. */
   private[graft] def compileCount(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       .getCount
 
-  /** The "codegen_compiles" record field: query -> the compile count of
-    * its call in each timed pass, in pass order.
+  /** One timed call of one query. `wallS` is -1 when the call threw. */
+  final case class Sample(wallS: Double, cpuS: Double, compiles: Long,
+      eng: Counts)
+
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  private def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Times `names` on `dir` for `passes` passes, each pass calling every
+    * query once in order. `tally` must be registered on `spark`.
     */
-  private[graft] def codegenJson(passes: Seq[Map[String, Long]]): String =
-    passes.flatMap(_.keys).distinct.sorted.map { n =>
-      "\"" + n + "\":" + passes.flatMap(_.get(n)).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+  def timedPasses(spark: SparkSession, tally: Tally, names: Seq[String],
+      dir: String, passes: Int): Map[String, Seq[Sample]] = {
+    quiesce(spark)
+    val samples = (1 to passes).flatMap { _ =>
+      names.map { name =>
+        val e0 = tally.counts
+        val c0 = compileCount()
+        val cpu0 = os.getProcessCpuTime
+        val t0 = System.nanoTime()
+        val ok =
+          try { runNoop(SparkEntry.queries(name)(spark, dir)); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
+        val wall = (System.nanoTime() - t0) / 1e9
+        val cpu = (os.getProcessCpuTime - cpu0) / 1e9
+        val compiles = compileCount() - c0
+        quiesce(spark)
+        name -> Sample(if (ok) wall else -1.0, cpu, compiles,
+          tally.counts - e0)
+      }
+    }
+    samples.groupMap(_._1)(_._2)
+  }
+
+  /** Minimum wall seconds, or -1 when any sample failed. */
+  private[graft] def minWall(ss: Seq[Sample]): Double =
+    if (ss.isEmpty || ss.exists(_.wallS < 0)) -1.0 else ss.map(_.wallS).min
+
+  /** One query's per-pass fields, each an array in pass order. */
+  private[graft] def sampleJson(ss: Seq[Sample]): String = {
+    def arr(f: Sample => String) = ss.map(f).mkString("[", ",", "]")
+    def mb(b: Long) = f"${b / 1e6}%.3f"
+    Seq(
+      "wall_s" -> arr(s => f"${s.wallS}%.3f"),
+      "cpu_s" -> arr(s => f"${s.cpuS}%.3f"),
+      "codegen_compiles" -> arr(_.compiles.toString),
+      "jobs" -> arr(_.eng.jobs.toString),
+      "stages" -> arr(_.eng.stages.toString),
+      "task_s" -> arr(s => f"${s.eng.taskMs / 1e3}%.3f"),
+      "shuffle_read_mb" -> arr(s => mb(s.eng.shuffleRead)),
+      "shuffle_write_mb" -> arr(s => mb(s.eng.shuffleWrite))
+    ).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  }
+
+  private def obj[A](m: Map[String, A])(f: A => String): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v) }
+      .mkString("{", ",", "}")
+
+  /** The BENCH_SELF.json record and the stdout summary line. */
+  private[graft] def render(sfDir: String, main: Map[String, Seq[Sample]],
+      persistSec: Double,
+      served: Map[String, Seq[Sample]]): (String, String) = {
+    val mins = main.map { case (n, ss) => n -> minWall(ss) }
+    val total = mins.values.filter(_ >= 0).sum
+    val cpuTotal = main.values.flatten.map(_.cpuS).sum
+    val servedMins = served.map { case (n, ss) => n -> minWall(ss) }
+    val errors = (main ++ served.map { case (n, ss) => s"$n@served" -> ss })
+      .collect { case (n, ss) if ss.exists(_.wallS < 0) => "\"" + n + "\"" }
+      .toSeq.sorted.mkString("[", ",", "]")
+    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","passes":$Passes,"cpu_s":$cpuTotal%.3f"""
+    val record = s"""{$head,"queries":${obj(mins)(v => f"$v%.3f")},"per_query":${obj(main)(sampleJson)},"graph_persist_sec":${f"$persistSec%.3f"},"graph_served":${obj(servedMins)(v => f"$v%.3f")},"served_per_query":${obj(served)(sampleJson)},"errors":$errors,"sf":"$sfDir"}"""
+    val summary = f"""{$head,"n_queries":${mins.size},"graph_persist_sec":$persistSec%.3f,"graph_served_total":${servedMins.values.filter(_ >= 0).sum}%.3f,"graph_served_n":${servedMins.size},"errors":$errors,"record":"BENCH_SELF.json","sf":"$sfDir"}"""
+    (record, summary)
+  }
+
+  /** The families the persisted index tables serve. */
+  private def servedNames: Set[String] =
+    (graft.queries.Graph.queries ++ graft.text.Winnowing.queries ++
+      graft.text.SubstringDedup.queries ++ graft.text.Dsir.queries ++
+      graft.mm.Multimodal.queries).keySet
+
+  private def dropServed(spark: SparkSession, dir: String): Unit =
+    Seq[(SparkSession, String) => Unit](
+      graft.queries.Graph.dropAdjacency,
+      graft.text.Winnowing.dropFingerprintIndex,
+      graft.text.SubstringDedup.dropOccurrenceIndex,
+      graft.text.Dsir.dropRatioTable,
+      graft.text.TextAnalysis.dropBpeStream,
+      graft.mm.Multimodal.dropPhashIndex
+    ).foreach(drop => try drop(spark, dir) catch { case _: Throwable => () })
 
   def main(args: Array[String]): Unit = {
-    val t0 = System.nanoTime()
-    def elapsed(): Double = (System.nanoTime() - t0) / 1e9
-    // a malformed budget DEGRADES to the default instead of killing the
-    // run before warmup with no record (ADVICE r17 — crash-durability
-    // applies to the bench's own arguments too)
-    val budget = args.headOption.flatMap(_.toDoubleOption)
-      .orElse(sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
-        .flatMap(_.toDoubleOption))
-      .getOrElse {
-        val bad = args.headOption
-          .orElse(sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC"))
-        bad.filterNot(_.toDoubleOption.isDefined).foreach(v =>
-          System.err.println(
-            s"[bench] non-numeric budget '$v' — using $DefaultBudgetSec s"))
-        DefaultBudgetSec
-      }
-    val ladder = Ladder(budget)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val names =
+      if (args.nonEmpty) args.toSeq.distinct else SparkEntry.queries.keys.toSeq.sorted
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val tally = new Tally
+    spark.sparkContext.addSparkListener(tally)
 
-    // witnesses (r15 verdict #6 + r16 verdict #3): the FIRST samples
-    // land before any bench work — anything there is external — and one
-    // more lands at every pass/epoch boundary, so a mid-run co-tenant
-    // wave shows in the record instead of needing a post-hoc
-    // adjudication essay. The CPU snaps see what loadavg cannot:
-    // same-envelope contention (busy jiffies the bench didn't spend).
-    val loadSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val cpuSnaps = scala.collection.mutable.ArrayBuffer.empty[CpuSnap]
-    def boundary(): Unit = {
-      load1().foreach(loadSamples += _)
-      readCpuSnap().foreach(cpuSnaps += _)
-    }
-    boundary()
-
-    // sf0.01, not sf0.001: the tiny tier doesn't run the md5/LSH hot
-    // loops long enough to trigger C2 JIT, and the first heavy query
-    // then pays ~3× (observed d2 4.4 s warm vs 12.6 s cold).
     val warmupDir = "/root/testdata/sf0.01"
     if (new java.io.File(warmupDir).exists())
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try runNoop(fn(spark, warmupDir)) catch { case _: Throwable => () }
+      names.foreach { n =>
+        try runNoop(SparkEntry.queries(n)(spark, warmupDir))
+        catch { case _: Throwable => () }
       }
+    val main = timedPasses(spark, tally, names, sfDir, Passes)
 
-    var errors = List.empty[String]
-    // mid-pass witness boundaries every K queries (~40 s apart): a
-    // pass-length interval averages a 5-minute co-tenant wave down
-    // below the flag threshold — the r13–r16 waves are shorter than a
-    // pass but longer than a few queries, so this grain sees them
-    var sinceBoundary = 0
-    def midPassBoundary(): Unit = {
-      sinceBoundary += 1
-      if (sinceBoundary >= 25) { sinceBoundary = 0; boundary() }
-    }
-    val compilesPerPass =
-      scala.collection.mutable.ArrayBuffer.empty[Map[String, Long]]
-    def timedPass(skipRetired: Boolean): Map[String, Double] = {
-      val compiles = Map.newBuilder[String, Long]
-      val times = SparkEntry.queries.collect {
-        case (name, fn) if !(skipRetired && Retired.contains(name)) =>
-          val c = compileCount()
-          val t = System.nanoTime()
-          val ok =
-            try { runNoop(fn(spark, sfDir)); true }
-            catch { case _: Throwable => errors ::= name; false }
-          compiles += name -> (compileCount() - c)
-          midPassBoundary()
-          name -> (if (ok) (System.nanoTime() - t) / 1e9 else -1.0)
-      }
-      compilesPerPass += compiles.result()
-      times
-    }
-    // ---- timed passes under the budget ladder -----------------------
-    // pass 1 always runs (and is the only pass timing the retired
-    // block); passes 2 and 3 run when the ladder says they fit — pass 3
-    // additionally reserves one served epoch, so the served column
-    // outranks the third sample (r16 sacrifice order).
-    val allPasses = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-    var lastPassSec = 0.0
-    def runPass(skipRetired: Boolean): Unit = {
-      boundary()
-      val s0 = elapsed()
-      allPasses += timedPass(skipRetired)
-      lastPassSec = elapsed() - s0
-      boundary()
-    }
-    runPass(skipRetired = false)
-    // pre-measurement epoch estimate, derived from the SERVED subset's
-    // per-query MINIMUM across the passes run so far — NOT the
-    // whole-pass wall (first r17 idle lesson: 177 JIT-inflated queries
-    // as the reserve skipped the served column with 470 s left) and
-    // NOT pass 1 alone (second r17 idle lesson: pass 1's served-family
-    // times alone still read ~2.5× their min and refused the epoch
-    // with 600 s left; the min is the same statistic the record
-    // reports, so the reserve estimates the cost the column will
-    // actually pay)
-    def minTimes: Map[String, Double] = SparkEntry.queries.keys.map { n =>
-      val vs = allPasses.flatMap(_.get(n)).filter(_ >= 0)
-      n -> (if (vs.isEmpty) -1.0 else vs.min)
-    }.toMap
-    def estEpoch0: Double = epochEstimate(minTimes)
-    if (ladder.runPass2(elapsed(), lastPassSec)) runPass(skipRetired = true)
-    if (allPasses.size == 2 &&
-        ladder.runPass3(elapsed(), lastPassSec, estEpoch0))
-      runPass(skipRetired = true)
-    val passes = allPasses.size
-    // min-of-passes only — the disagreement extra-samples are deferred
-    // to AFTER the served column (r17 idle-run lesson: they cost ~80 s
-    // when pass 1 is JIT-skewed, and they are the CHEAPEST information
-    // in the run — min-of-passes is already robust — so they must be
-    // the first thing the budget sacrifices, not the served column)
-    var results: Map[String, Double] = SparkEntry.queries.keys.map { name =>
-      val vs = allPasses.flatMap(_.get(name)).toSeq
-      if (vs.isEmpty || vs.exists(_ < 0)) name -> -1.0 else name -> vs.min
-    }.toMap
-    errors = errors.distinct
+    // served column: a failure here leaves it empty, never the record
+    val servedFamily = names.filter(servedNames)
+    val (persistSec, served) =
+      if (servedFamily.isEmpty) (-1.0, Map.empty[String, Seq[Sample]])
+      else try {
+        dropServed(spark, sfDir)
+        val t = System.nanoTime()
+        graft.queries.Graph.persistAdjacency(spark, sfDir)
+        graft.text.Winnowing.persistFingerprintIndex(spark, sfDir)
+        graft.text.SubstringDedup.persistOccurrenceIndex(spark, sfDir)
+        graft.text.Dsir.persistRatioTable(spark, sfDir)
+        graft.text.TextAnalysis.persistBpeStream(spark, sfDir)
+        graft.mm.Multimodal.persistPhashIndex(spark, sfDir)
+        val p = (System.nanoTime() - t) / 1e9
+        (p, timedPasses(spark, tally, servedFamily, sfDir, Passes))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] served column failed: ${e.getMessage}")
+        (-1.0, Map.empty[String, Seq[Sample]])
+      } finally dropServed(spark, sfDir)
 
-    // ---- EARLY FLUSH (r16 verdict #1a) -------------------------------
-    // the main record is now durable: files + stdout carry the full
-    // per-query result BEFORE any served-column write can be killed.
-    boundary()
-    val cpusN = cpus.toInt
-    /** (flagged, full loadJson, full cpuJson, compact loadJson, compact
-      * cpuJson). The COMPACT forms carry aggregates only — the summary
-      * stdout line must stay inside the driver's ~2000-char tail
-      * capture (r15's summary measured 1090 chars with 27 served
-      * pairs; the r17 mid-pass witness samples and 31-query served
-      * family would push the verbose form past the bound and turn
-      * "parsed" null). The full record file keeps every sample.
-      */
-    def witnessJson(): (Boolean, String, String, String, String) = {
-      val ivForWave = cpuIntervals(cpuSnaps.toSeq, cpusN)
-      // wave corroboration (r18, see loadFlagged): a real co-tenant
-      // wave shows up as external busy CPU; absent the CPU witness,
-      // stay conservative
-      val lFlag = loadFlagged(loadSamples.toSeq, cpusN,
-        waveCorroborated = ivForWave.isEmpty || ivForWave.map(_._3).max >= 2.0)
-      val cFlag = cpuFlagged(cpuSnaps.toSeq, cpusN)
-      val loadAgg =
-        if (loadSamples.isEmpty) "null"
-        else f"""{"min":${loadSamples.min}%.2f,"max":${loadSamples.max}%.2f,"mean":${loadSamples.sum / loadSamples.size}%.2f,"cpus":$cpusN,"flagged":$lFlag}"""
-      val loadJson =
-        if (loadSamples.isEmpty) "null"
-        else f"""{"samples":${loadSamples.map(v => f"$v%.2f")
-            .mkString("[", ",", "]")},"min":${loadSamples.min}%.2f,"max":${loadSamples.max}%.2f,"mean":${loadSamples.sum / loadSamples.size}%.2f,"cpus":$cpusN,"flagged":$lFlag}"""
-      val iv = cpuIntervals(cpuSnaps.toSeq, cpusN)
-      val cpuAgg =
-        if (iv.isEmpty) "null"
-        else f"""{"n":${iv.size},"max_ext":${iv.map(_._3).max}%.1f,"max_iowait":${iv.map(_._4).max}%.1f,"max_unacct":${iv.map(i => i._1 - i._5).max}%.1f,"mean_own":${iv.map(i => i._2 * i._1).sum / math.max(iv.map(_._1).sum, 1e-9)}%.1f,"flagged":$cFlag}"""
-      val cpuJson =
-        if (iv.isEmpty) "null"
-        else f"""{"iv":${iv.map { case (w, o, e, i, acct) =>
-            f"[$w%.1f,$o%.1f,$e%.1f,$i%.1f,$acct%.1f]" }.mkString("[", ",", "]")},"flagged":$cFlag}"""
-      (lFlag || cFlag, loadJson, cpuJson, loadAgg, cpuAgg)
-    }
-    val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val retiredJson = Retired.toSeq.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val prior = priorTimes(expectSf = Some(sfDir))
-    // tripwire re-sample state (r17 verdict #2): what tripped at pass
-    // time, and every re-sample taken — both land in the record
-    var flaggedAt = Map.empty[String, Double]
-    var flagResamples = Map.empty[String, List[Double]]
-
-    def render(persistSec: Double, servedMap: Map[String, Double],
-        servedSamples: Seq[(String, List[Double])],
-        epochsRun: Int): (String, String) = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val total = results.values.filter(_ >= 0).sum
-      val (flagged, loadJson, cpuJson, loadAgg, cpuAgg) = witnessJson()
-      val (regJson, regLoadJson) = regressionFields(results, prior, flagged)
-      val servedJson = servedMap.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val servedSamplesJson = servedSamples.map { case (k, ts) =>
-        "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val servedTotal = servedMap.values.filter(_ >= 0).sum
-      // est_epoch lands in the record so a skipped served column is
-      // auditable from the artifact alone (was the estimate wrong, or
-      // the budget genuinely short?)
-      val budgetJson = f"""{"sec":$budget%.0f,"elapsed":${elapsed()}%.1f,"passes_run":$passes,"epochs_run":$epochsRun,"est_epoch":$estEpoch0%.1f}"""
-      val resampJson = flagResamples.toSeq.sortBy(_._1).map { case (n, vs) =>
-        "\"" + n + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val clearJson = clearedJson(flaggedAt, results, prior)
-      val line = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"queries":$qs,"graph_persist_sec":$persistSec,"graph_served":$servedJson,"graph_served_samples":$servedSamplesJson,"errors":$errJson,"codegen_compiles":${codegenJson(compilesPerPass.toSeq)},"retired":$retiredJson,"regressions":$regJson,"regressions_under_load":$regLoadJson,"flag_resamples":$resampJson,"regressions_cleared":$clearJson,"load":$loadJson,"cpu":$cpuJson,"budget":$budgetJson,"sf":"$sfDir"}"""
-      // the summary carries AGGREGATES of the served column + witnesses
-      // (full detail lives in the file record) — it must fit the tail
-      val summary = f"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"n_queries":${results.size},"graph_persist_sec":$persistSec,"graph_served_total":$servedTotal%.1f,"graph_served_n":${servedMap.size},"errors":$errJson,"regressions":$regJson,"regressions_under_load":$regLoadJson,"regressions_cleared":$clearJson,"load":$loadAgg,"cpu":$cpuAgg,"budget":$budgetJson,"full_record":"BENCH_SELF.json","sf":"$sfDir"}"""
-      (line, summary)
-    }
-    // Persist the complete line to FILES first: the driver captures a
-    // BOUNDED 2000-char tail of stdout (measured from every
-    // BENCH_r*.json), and the full per-query map cannot fit it — the
-    // query NAMES alone exceed it. TWO copies (r13 verdict #3): the
-    // mutable BENCH_SELF.json (the driver's post-close run overwrites
-    // it) and a round-stamped BENCH_SELF_r{N}.json the driver never
-    // touches, N = newest closed driver tail + 1
-    // (SPARK_GRAFT_BENCH_OUT overrides the stamped name for ad-hoc
-    // runs).
-    val stamped = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val closed = Option(new java.io.File(".").listFiles()).toList.flatten
-        .map(_.getName).filter(_.matches("BENCH_r\\d+\\.json"))
-        .map(_.replaceAll("\\D", "").toInt).foldLeft(0)(math.max)
-      f"BENCH_SELF_r${closed + 1}%02d.json"
-    })
-    def flush(line: String): Unit =
-      Seq("BENCH_SELF.json", stamped).foreach { f =>
-        try java.nio.file.Files.write(
-          java.nio.file.Paths.get(f), (line + "\n").getBytes("UTF-8"))
-        catch { case _: Throwable => () } // read-only cwd must not fail the bench
-      }
-    val (mainLine, mainSummary) = render(-1.0, Map.empty, Seq.empty, 0)
-    flush(mainLine)
-    println(mainSummary)
-
-    // ---- tripwire re-samples FIRST (r17 verdict #2) ------------------
-    // A cross-round flag is the GATE SIGNAL; extra served samples are
-    // not — r17 shipped three spurious 2× flags (l4/s3/t22, untouched
-    // code, a tail load wave on a 2-pass min) because re-samples were
-    // ordered dead last and never ran. Flagged queries now re-time
-    // immediately after the durable flush — seconds each, before any
-    // served epoch spends the budget — and a flag that vanishes is
-    // annotated environmental in the record itself
-    // ("regressions_cleared", with both numbers), so the adjudication
-    // reads from the artifact instead of a judge's cross-reference.
-    boundary()
-    locally {
-      val trippedNow = trippedNames(results, prior)
-      flaggedAt = trippedNow.map(n => n -> results(n)).toMap
-      trippedNow.foreach { name =>
-        var tries = 0
-        while (tries < 2 &&
-            prior.exists(p => tripped(name, results(name), p._2)) &&
-            ladder.runEpoch(elapsed(), 1.5 * (results(name) max 0.0))) {
-          val t = System.nanoTime()
-          val v =
-            try { runNoop(SparkEntry.queries(name)(spark, sfDir))
-                  (System.nanoTime() - t) / 1e9 }
-            catch { case _: Throwable => Double.MaxValue }
-          flagResamples += name -> (flagResamples.getOrElse(name, Nil) :+ v)
-          if (v < results(name)) results += name -> v
-          tries += 1
-        }
-      }
-      if (trippedNow.nonEmpty) {
-        boundary()
-        val (line2, _) = render(-1.0, Map.empty, Seq.empty, 0)
-        flush(line2) // the durable record carries the adjudication
-      }
-    }
-
-    // ---- index-served column (r11 verdict #2), budget-laddered -------
-    // The timings above are the COLD path (indexes rebuilt per query) —
-    // the fallback a fresh session pays. The 100 TB serving default is
-    // the persisted bucketed index tables, so the bench records BOTH:
-    // persist once (cost recorded), re-time every served-family query,
-    // drop. A failure here must not kill the main record (it is already
-    // flushed; the served column just reads absent).
-    // WAVE-DRIFT HARDENING (r13 verdict #8): the machine's co-tenant
-    // waves span several minutes — longer than three back-to-back
-    // samples of one query, and sometimes longer than a whole
-    // contiguous served block — so min-of-3-consecutive let one wave
-    // own the column. Protocol: up to TWO persist epochs (budget
-    // permitting), each with two full passes over the sorted family; a
-    // query's samples are separated by a full family pass within an
-    // epoch and by drop + re-persist across epochs, so a wave must
-    // persist across the entire served block to bias the min. All
-    // samples land in the full record ("graph_served_samples").
-    // The served family covers every persisted-index consumer (graph
-    // adjacency, winnowing fingerprints, ngram occurrences, dsir
-    // counts, bpe token stream, mm phash) — the column keeps its
-    // "graph_served" name for parseTimes compatibility.
-    def dropAll(): Unit = {
-      try graft.queries.Graph.dropAdjacency(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.text.Winnowing.dropFingerprintIndex(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.text.SubstringDedup.dropOccurrenceIndex(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.text.Dsir.dropRatioTable(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.text.TextAnalysis.dropBpeStream(spark, sfDir)
-      catch { case _: Throwable => () }
-      try graft.mm.Multimodal.dropPhashIndex(spark, sfDir)
-      catch { case _: Throwable => () }
-    }
-    var epochsRun = 0
-    val (persistSec, servedSamples) =
-      try {
-        val names = (graft.queries.Graph.queries ++
-          graft.text.Winnowing.queries ++
-          graft.text.SubstringDedup.queries ++
-          graft.text.Dsir.queries ++
-          graft.mm.Multimodal.queries).toSeq.sortBy(_._1)
-        var epochCost = estEpoch0 // refined to the measured cost after epoch 1
-        val epochs = scala.collection.mutable.ArrayBuffer
-          .empty[(Double, Seq[Map[String, Option[Double]]])]
-        while (epochs.size < 2 && ladder.runEpoch(elapsed(), epochCost)) {
-          boundary()
-          val e0 = elapsed()
-          dropAll()
-          val t = System.nanoTime()
-          graft.queries.Graph.persistAdjacency(spark, sfDir)
-          graft.text.Winnowing.persistFingerprintIndex(spark, sfDir)
-          graft.text.SubstringDedup.persistOccurrenceIndex(spark, sfDir)
-          graft.text.Dsir.persistRatioTable(spark, sfDir)
-          graft.text.TextAnalysis.persistBpeStream(spark, sfDir)
-          graft.mm.Multimodal.persistPhashIndex(spark, sfDir)
-          val p = (System.nanoTime() - t) / 1e9
-          // one failing query records no sample like timedPass — it
-          // must not throw the whole served column away (ADVICE r12 #2)
-          val ss = (1 to 2).map { _ =>
-            names.map { case (n, fn) =>
-              val s0 = System.nanoTime()
-              try { runNoop(fn(spark, sfDir))
-                    n -> Some((System.nanoTime() - s0) / 1e9) }
-              catch { case _: Throwable => n -> None }
-            }.toMap
-          }
-          epochs += ((p, ss))
-          epochsRun += 1
-          epochCost = elapsed() - e0
-        }
-        if (epochs.isEmpty) (-1.0, Seq.empty[(String, List[Double])])
-        else {
-          val perQ = names.map { case (n, _) =>
-            n -> epochs.toSeq.flatMap(_._2).flatMap(_(n)).toList
-          }
-          (epochs.map(_._1).min, perQ)
-        }
-      } catch { case _: Throwable => (-1.0, Seq.empty[(String, List[Double])]) }
-      finally {
-        // the persisted tables must not leak into the next session even
-        // when the persist itself threw (ADVICE r12 #2)
-        dropAll()
-      }
-    val servedMap = servedSamples.map { case (n, ts) =>
-      n -> (if (ts.isEmpty) -1.0 else ts.min)
-    }.toMap
-
-    // ---- disagreement extra-samples (bought LAST, budget permitting):
-    // a query whose pass samples disagree by >2x gets one more sample
-    // before its minimum is believed (r3 verdict #2). Per-query cost is
-    // its own min, so the gate reserves exactly that plus slack.
-    boundary()
-    if (passes > 1) {
-      val disagreeing = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-        val vs = allPasses.flatMap(_.get(name)).toSeq
-        vs.size > 1 && vs.forall(_ >= 0) && vs.max > 2 * vs.min
-      }
-      disagreeing.foreach { name =>
-        if (ladder.runEpoch(elapsed(), results(name) max 0.0)) {
-          val t = System.nanoTime()
-          val extra =
-            try { runNoop(SparkEntry.queries(name)(spark, sfDir))
-                  (System.nanoTime() - t) / 1e9 }
-            catch { case _: Throwable => Double.MaxValue }
-          results += name -> math.min(results(name), extra)
-        }
-      }
-    }
-
-    boundary()
-    // ---- FINAL RECORD (rewrites the early flush in place) ------------
-    val (line, summary) = render(persistSec, servedMap, servedSamples,
-      epochsRun)
-    flush(line)
-    println(line)
-    // LAST stdout line (build.sbt turns sbt's "[success]" epilogue off):
-    // a compact summary guaranteed to fit the driver's tail window and
-    // parse as one JSON object — total/passes/errors/regressions plus a
-    // pointer to the committed full record. Every parseable aggregate
-    // the big line carries is here; only the per-query map (which is
-    // physically larger than the capture window) lives in the file.
+    val (record, summary) = render(sfDir, main, persistSec, served)
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
+      (record + "\n").getBytes("UTF-8"))
     println(summary)
     spark.stop()
-  }
-
-  /** Prior round's per-query times: SPARK_GRAFT_PREV_BENCH if set, else
-    * the committed FULL records first — BENCH_SELF.json (the last
-    * completed run's own complete line) and BENCH_SELF_r*.json
-    * newest-first — THEN every driver-tail BENCH_r*.json newest-first.
-    * The full-record preference is r12 verdict #1: the driver's tail
-    * capture is bounded at ~2000 chars and the graph_served block now
-    * consumes part of it, so a tail candidate can parse to only ~34 of
-    * 158 cold timings — a full record always carries all of them.
-    * A candidate that fails to parse falls through to the next instead
-    * of killing the cross-round diff (r5 verdict #1: the
-    * single-candidate version went None on a truncated BENCH_r05.json
-    * and silently disarmed the regression tripwire).
-    *
-    * `expectSf`: when set (Bench.main passes the current sf dir), a full
-    * record whose own "sf" field names a DIFFERENT dir is skipped — a
-    * BENCH_SELF.json left behind by an sf0.01 iteration run must not
-    * become the baseline for an sf0.1 run (every query would read as a
-    * 10× regression). Driver tails carry sf as a bare wrapper number and
-    * are not filtered — they are always driver-scale runs.
-    */
-  private[graft] def priorTimes(dir: java.io.File = new java.io.File("."),
-      expectSf: Option[String] = None): Option[(String, Map[String, Double])] = {
-    val candidates = sys.env.get("SPARK_GRAFT_PREV_BENCH")
-      .map(f => List(new java.io.File(f)))
-      .getOrElse {
-        val all = Option(dir.listFiles()).toList.flatten
-        val tails = all.filter(_.getName.matches("BENCH_r\\d+\\.json"))
-          .sortBy(_.getName).reverse
-        // Prefer round-stamped full records of CLOSED rounds (a driver
-        // tail BENCH_rN.json exists for them) over the mutable
-        // BENCH_SELF.json: the mutable file is overwritten by every
-        // run, so preferring it makes the baseline this round's own
-        // previous run after the first iteration — a regression
-        // introduced early in the round bakes itself into the baseline
-        // and stops being flagged (ADVICE r13 #2's ratchet). The
-        // current round's own stamp (no tail yet) is excluded for the
-        // same reason. BENCH_SELF.json stays as a last resort before
-        // the bounded driver tails.
-        val closed = tails.map(_.getName.replaceAll("\\D", "").toInt)
-          .foldLeft(0)(math.max)
-        val fullRecs = all.filter(_.getName.matches("BENCH_SELF(_r\\d+)?\\.json"))
-          .sortBy(_.getName).reverse // BENCH_SELF_rNN desc, then BENCH_SELF
-        val (selfMut, stamped) = fullRecs.partition(_.getName == "BENCH_SELF.json")
-        val committed = stamped.filter(
-          _.getName.replaceAll("\\D", "").toInt <= closed)
-        committed ++ selfMut ++ stamped.filterNot(committed.contains) ++ tails
-      }
-    val sfRe = """"sf"\s*:\s*"([^"]*)"""".r
-    candidates.iterator.flatMap { f =>
-      val raw =
-        try new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        catch { case _: Throwable => "" }
-      val sfOk = (expectSf, sfRe.findFirstMatchIn(raw)) match {
-        case (Some(want), Some(m)) => m.group(1) == want
-        case _ => true
-      }
-      val times =
-        try parseTimes(raw) catch { case _: Throwable => Map.empty[String, Double] }
-      if (sfOk && times.nonEmpty) Some((f.getName, times)) else None
-    }.nextOption()
-  }
-
-  /** Extract the per-query seconds map from a driver-wrapped bench file.
-    * The driver wraps the bench stdout line in {"tail": "...escaped..."}
-    * and the tail is a BOUNDED capture, so two shapes occur:
-    *   1. intact — the "queries":{...} object is present: parse the flat
-    *      "name":sec pairs inside it.
-    *   2. head-truncated (BENCH_r05.json) — the bound cut the line BEFORE
-    *      the "queries" key but the flat pairs themselves survive: parse
-    *      every "name":number pair up to the "errors" key, minus the
-    *      driver-wrapper numeric keys (n/rc/cpus/sf) and the bench's own
-    *      "value". Regression ratios are keyed by the same query names
-    *      but sit AFTER "errors", so the bound excludes them.
-    * No JSON dependency — a regex over the known flat shape.
-    */
-  private[graft] def parseTimes(raw: String): Map[String, Double] = {
-    val txt = raw.replace("\\\"", "\"")
-    val pair = raw""""([A-Za-z0-9_]+)"\s*:\s*(-?[0-9][0-9.eE+-]*)""".r
-    def pairsIn(s: String): Map[String, Double] =
-      pair.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    val i = txt.lastIndexOf("\"queries\"")
-    if (i >= 0) {
-      val body = txt.drop(i + "\"queries\"".length)
-      pairsIn(body.take(body.indexOf("}") + 1))
-    } else {
-      val wrapperKeys = Set("n", "rc", "cpus", "sf", "value", "metric",
-        "passes", "n_queries", "graph_persist_sec")
-      // stop at whichever trailing section appears first: the served-
-      // graph column REUSES query names (served times must not
-      // overwrite the cold ones this diff is about), and regression
-      // ratios after "errors" do too
-      val stops = Seq("\"graph_persist_sec\"", "\"graph_served\"",
-        "\"errors\"").map(txt.indexOf).filter(_ >= 0)
-      val bounded = if (stops.nonEmpty) txt.take(stops.min) else txt
-      pairsIn(bounded) -- wrapperKeys
-    }
   }
 }

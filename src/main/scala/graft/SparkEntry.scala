@@ -7,16 +7,34 @@ import graft.sim.{Hybrid, KMeans, ProductQuantization, Similarity}
 import graft.streaming.StreamQueries
 import graft.mm.Multimodal
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry and the session every graft main runs on.
   *
-  * `queries` maps every implemented operator (SURVEY.md §2 + extension
-  * layer) to a `(SparkSession, sfDir) => DataFrame`; `oracleSql` carries
-  * the equivalent DuckDB SQL for the driver's hash-compare. Keys and
-  * output column names are aligned between the two. Queries end in a
-  * deterministic ORDER BY and round double aggregates for cross-engine
-  * hash stability.
+  * `queries` maps every implemented operator to a
+  * `(SparkSession, sfDir) => DataFrame`; `oracleSql` carries the
+  * equivalent DuckDB SQL that `scripts/check.py` and perfbench compare
+  * against. Keys and output column names are aligned between the two.
+  * Queries end in a deterministic ORDER BY and round double aggregates
+  * for cross-engine hash stability.
   */
 object SparkEntry {
+
+  /** `local[N]` with N from SPARK_GRAFT_CPUS, else the host's processors;
+    * as many shuffle partitions, AQE on, UTC, parquet nanos read as longs,
+    * [[GraftExtensions]] and no UI. Callers add their own extras (Hive,
+    * warehouse, broadcast-off) before `getOrCreate()`.
+    */
+  def localSession(): SparkSession.Builder = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+  }
 
   /** Flagship: the reference's one real analytical query (A1+O1,
     * ETL_glue_pregao_B3.json:164 — group-by + SUM + top-5) on sf=0.001.

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for `scripts/check.py`'s DuckDB compare.
   *
   * Optional third arg: comma-separated query names — dump only that
   * subset (and only its oracle entries). Used by the sf1 spot-oracle
-  * (r6 verdict #8) and for fast single-query iteration; the driver's
-  * two-arg contract is unchanged.
+  * and for fast single-query iteration.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -19,16 +17,7 @@ object Verify {
       .getOrElse(SparkEntry.queries)
     val oracleSql = only.map(o => SparkEntry.oracleSql.view.filterKeys(o).toMap)
       .getOrElse(SparkEntry.oracleSql)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Wipe any previous dump: a query that fails this run must NOT
     // leave a stale-but-plausible parquet behind for the compare step.

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * nested-`transform`+`slice`+`flatten` HOF formulation this replaces
   * is CodegenFallback — two lambda invocations plus an array slice
   * allocation PER ELEMENT — and its explode stage carried 4.3 CPU-s
-  * for 147 k orders → 1.2 M pairs at sf0.1 (StageProfile r18). One
+  * for 147 k orders → 1.2 M pairs at sf0.1 (r18 stage profile). One
   * tight two-index loop emits the same pairs in the same order.
   */
 object PairKernel {

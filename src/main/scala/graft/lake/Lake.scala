@@ -191,7 +191,7 @@ object Lake {
   }
 
   /** Rename-aside directory swap shared by [[compact]] and
-    * [[upsertByKey]]: original → `_old`, tmp → original, delete `_old`.
+    * [[commitUpsert]]: original → `_old`, tmp → original, delete `_old`.
     * Old data survives every failure point; the reader-visible no-data
     * window is one rename.
     */
@@ -389,61 +389,6 @@ object Lake {
       .select(col(key), col("status"))
   }
 
-  /** Key-based upsert: rows in `increment` replace same-key rows in the
-    * table; everything else is kept. CONTRACT (r5 verdict #5):
-    *  - `increment` must be KEY-UNIQUE — enforced here with one agg over
-    *    the increment (the small side by construction) because a
-    *    duplicated key would silently land twice and poison every later
-    *    read; failing fast beats nondeterministically dropping one.
-    *  - SINGLE WRITER per path — the read-rewrite-swap is not atomic, so
-    *    two concurrent upserts each read the same base and the second
-    *    swap erases the first's rows (lost update). Serialize writers
-    *    externally; a transactional table format would lift this, and
-    *    the offline sandbox has none (PROGRESS.md round-4 adjudication).
-    */
-  def upsertByKey(spark: SparkSession, increment: DataFrame, path: String,
-      key: String): Unit =
-    stageUpsert(spark, increment, path, key,
-      dup => s"upsertByKey: increment has duplicate key '$key' = $dup; " +
-        "dedup the increment first (e.g. latest-per-key) — which row wins " +
-        "is the caller's business rule, not this function's",
-      guard = () => ()) match {
-      case Some(tmp) => swapInto(spark, tmp, path)
-      case None => increment.write.option("compression", "snappy").parquet(path)
-    }
-
-  /** The rewrite body of [[upsertByKey]] and [[commitUpsert]]: refuse a
-    * key-duplicated increment (`duplicate` words the message from the
-    * offending key), run `guard`, then stage the rewritten store —
-    * existing rows minus the increment's keys, plus the increment — in
-    * `<path>_upserting`. Returns the staging dir, or None when no store
-    * exists at `path` yet and the caller writes the increment there.
-    *
-    * The duplicate check stays its own pass over the increment: folding
-    * it into the anti-join's key-side aggregate is unsound, because the
-    * optimizer infers `isnotnull(key)` on that side, so two null-key rows
-    * would pass.
-    */
-  private def stageUpsert(spark: SparkSession, increment: DataFrame,
-      path: String, key: String, duplicate: Any => String,
-      guard: () => Unit): Option[String] = {
-    val dup = increment.groupBy(key).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty, duplicate(dup.head.get(0)))
-    guard()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
-    else {
-      val tmp = path.stripSuffix("/") + "_upserting"
-      spark.read.parquet(path)
-        .join(increment.select(key).distinct(), Seq(key), "left_anti")
-        .unionByName(increment)
-        .write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-      Some(tmp)
-    }
-  }
-
   // ------------------------------------------- optimistic commit guard
 
   /** The store's commit marker path — OUTSIDE the parquet directory
@@ -628,21 +573,22 @@ object Lake {
       .filter(recoverCommit(spark, _))
   }
 
-  /** MULTI-WRITER-guarded [[upsertByKey]] (r14 verdict stretch #8):
-    * optimistic concurrency over the commit marker — read the stamp,
-    * build the rewritten store into staging, RE-CHECK the stamp, and
-    * only then swap + bump. A concurrent guarded writer that committed
-    * in between moves the stamp, so the re-check throws
-    * ConcurrentModificationException (the loser's staging is cleaned
-    * up; the winner's rows survive — ConcurrencySpec pins the
-    * two-writer interleaving) instead of the silent lost update
-    * [[upsertByKey]]'s single-writer contract documents. HONEST
-    * RESIDUE: the re-check→swap window is not atomic — two writers
-    * whose entire build phases interleave inside it can still race
-    * (a transactional table format is the real fix; the sandbox has
-    * none) — but the window shrinks from "the whole rewrite" to two
-    * filesystem ops, and every torn outcome is detectable because the
-    * stamp then disagrees with one writer's expectation.
+  /** Key-based upsert: rows in `increment` replace same-key rows in the
+    * store at `path`; everything else is kept. CONTRACT:
+    *  - `increment` must be KEY-UNIQUE — enforced with one agg over the
+    *    increment (the small side by construction), because a duplicated
+    *    key would silently land twice and poison every later read;
+    *    failing fast beats nondeterministically dropping one.
+    *  - MULTI-WRITER safe by optimistic concurrency over the commit
+    *    marker: read the stamp, build the rewritten store into staging,
+    *    RE-CHECK the stamp, and only then swap + bump. A concurrent
+    *    guarded writer that committed in between moves the stamp, so the
+    *    re-check throws ConcurrentModificationException (the loser's
+    *    staging is cleaned up; the winner's rows survive —
+    *    ConcurrencySpec pins the two-writer interleaving) instead of a
+    *    silent lost update. The write-ahead intent (below) covers the
+    *    re-check→swap window: a crashed winner is replayed by
+    *    [[recoverCommit]], and a racing writer refuses at a live intent.
     */
   def upsertByKeyGuarded(spark: SparkSession, increment: DataFrame,
       path: String, key: String): Unit =
@@ -688,18 +634,30 @@ object Lake {
             "during the rewrite — a concurrent writer committed; retry " +
             "from a fresh read")
     }
-    val staged = stageUpsert(spark, increment, path, key,
-      dup => s"commitUpsert: increment has duplicate key '$key' = $dup",
-      // early: refuse before clobbering a crashed winner's staging
-      guard = () => recheck())
+    // the duplicate check stays its own pass over the increment: folding
+    // it into the anti-join's key-side aggregate is unsound, because the
+    // optimizer infers `isnotnull(key)` on that side, so two null-key
+    // rows would pass
+    val dup = increment.groupBy(key).count()
+      .filter(col("count") > 1).limit(1).collect()
+    require(dup.isEmpty, s"commitUpsert: increment has duplicate key " +
+      s"'$key' = ${dup.head.get(0)}; dedup the increment first (e.g. " +
+      "latest-per-key) — which row wins is the caller's business rule")
+    recheck() // early: refuse before clobbering a crashed winner's staging
     val token = java.util.UUID.randomUUID().toString
-    if (staged.isEmpty) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
       recheck() // a guarded writer may have created the store just now
       increment.write.option("compression", "snappy").parquet(path)
       writeCommitStamp(spark, path, token)
       return
     }
-    val tmp = staged.get
+    // stage the rewritten store: existing rows minus the increment's
+    // keys, plus the increment
+    val tmp = path.stripSuffix("/") + "_upserting"
+    spark.read.parquet(path)
+      .join(increment.select(key).distinct(), Seq(key), "left_anti")
+      .unionByName(increment)
+      .write.mode("overwrite").option("compression", "snappy").parquet(tmp)
     try recheck()
     catch {
       case e: java.util.ConcurrentModificationException =>

@@ -16,7 +16,7 @@ import graft.lake.Tables._
   *     with an `is_current` flag.
   *   - CDC apply (`cdcApply` / l2): a changelog of I/U/D ops collapses
   *     to current state — latest op per key wins, deletes drop the key.
-  *     The batch twin of `Lake.upsertByKey` with delete semantics.
+  *     The batch twin of `Lake.upsertByKeyGuarded` with delete semantics.
   *   - Column profiling (`profile` / v1): per-column null/distinct/range
   *     stats in ONE pass — the scan that drives layout and skew choices.
   *   - Constraint checks (`checkConstraints` / v2, `quarantine`): named
@@ -368,7 +368,7 @@ object Warehouse {
     * the delta aggregates map-side to its key partials, the merge
     * shuffles two keyset-sized relations on the SAME key; history is
     * never rescanned. The state table persists via the lake's K2/K6
-    * surface (or `upsertByKey` keyed on the group key); derived
+    * surface (or `Lake.upsertByKeyGuarded` keyed on the group key); derived
     * measures (avg = s/n) come out of the state at read time, which is
     * why only algebraic aggregates (count/sum/min/max) belong in it —
     * holistic ones (exact percentile) need the a6/a5 sketch surface.

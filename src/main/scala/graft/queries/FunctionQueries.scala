@@ -163,7 +163,7 @@ object FunctionQueries {
     // r18: two explode-stage fixes (guide §2.3/§2.5 input-skew):
     //   1. PARALLELIZE the ~170× variant fan-out. The input table is a
     //      single small parquet split, so the explode — the query's
-    //      dominant CPU (StageProfile r18: 3.4 s in ONE task) — ran
+    //      dominant CPU (r18 stage profile: 3.4 s in ONE task) — ran
     //      single-threaded; input-split sizing can't see a 170×
     //      generator. The explicit-width repartition spreads the rows
     //      across the cluster's cores BEFORE the fan-out (explicit

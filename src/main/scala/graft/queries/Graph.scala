@@ -167,7 +167,7 @@ object Graph {
       .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
     // symmetrize in ONE pass over the aggregate: the union-of-two-
     // selects form evaluated the (ck, sk) aggregate subtree once per
-    // direction (r18 StageProfile: twin 0.77 s stages each writing the
+    // direction (r18 stage profile: twin 0.77 s stages each writing the
     // full 587 k-row aggregate); explode(array(fwd, rev)) emits both
     // directions from a single evaluation — same rows, same types
     e0.select(explode(array(
@@ -224,7 +224,7 @@ object Graph {
     * deterministic adjacency (pair aggregate + symmetrizing explode +
     * checkpoint, ~1.2 s at sf0.1) on every invocation, and a single
     * g14 run built it three times (its own call + the lpa and refine
-    * memo misses — r18 StageProfile: the 147 k/1.2 M-row stage triplet
+    * memo misses — r18 stage profile: the 147 k/1.2 M-row stage triplet
     * ×3). A hit is bit-identical to a re-run (integer weights off a
     * deterministic scan; GraphSpec pins the relation), staleness
     * re-derives via the same corpus signature the other memos use, and
@@ -412,7 +412,7 @@ object Graph {
     graft.functions.PairExpansionFn.ensureRegistered(li.sparkSession)
     // the ~8x graft_pairs fan-out sits behind the order-key exchange,
     // which AQE re-coalesces to a handful of tasks at narrow tiers (the
-    // r18 StageProfile read the whole 147k-order -> 1.2M-pair explode
+    // r18 stage profile read the whole 147k-order -> 1.2M-pair explode
     // in 4 tasks, 2.3 CPU-s serialized) — spread it on the scan-side
     // witness (identity at scale, [[graft.ops.Spread.ifNarrowInput]])
     val pairs = graft.ops.Spread.ifNarrowInput(li, li
@@ -424,7 +424,7 @@ object Graph {
       .agg(count(lit(1)).as("w"))
     // symmetrize in ONE pass over the aggregate (the g1EdgeRelationFrom
     // note): the union form ran the final (a, b) aggregate once per
-    // direction — the r18 StageProfile read 2× the pair exchange
+    // direction — the r18 stage profile read 2× the pair exchange
     // (2 397 318 rows) into the checkpoint stage; explode(array(fwd,
     // rev)) halves the aggregated rows and reads the exchange once
     pairs.select(explode(array(

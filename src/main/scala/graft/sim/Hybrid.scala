@@ -40,7 +40,7 @@ object Hybrid {
     // both corpus-side rankers run their per-row scoring kernel
     // (exact cosine / shingle intersect) in the scan stage behind a
     // broadcast join — spread narrow tiers across the cores first
-    // (r18, [[graft.ops.Spread]]; StageProfile: the whole lexical
+    // (r18, [[graft.ops.Spread]]; stage profile: the whole lexical
     // ranker in ONE 0.75 s task at sf0.1); identity at scale
     val e = embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)

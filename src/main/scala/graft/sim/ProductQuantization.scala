@@ -233,7 +233,7 @@ object ProductQuantization {
     // 2. residual encode via linearity: both dots codegen'd on raw slices.
     // The SubSpaces×Entries fold sits behind the window's vec_id
     // exchange, which AQE re-coalesces at narrow tiers (r18
-    // StageProfile: a single 0.7 s encode task) — spread it on the
+    // stage profile: a single 0.7 s encode task) — spread it on the
     // scan-side witness (identity at scale)
     val withDists = (0 until SubSpaces).foldLeft(
       graft.ops.Spread.ifNarrowInput(e, assigned, col("vec_id"))) { (df, j) =>

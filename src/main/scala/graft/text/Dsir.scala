@@ -497,7 +497,7 @@ object Dsir {
   def t45DsirLogResample(s: SparkSession, d: String): DataFrame = {
     // one scoringState for BOTH resamples (r18): the surrogate and the
     // log-domain leg otherwise each re-derived features + counts —
-    // six cold bigram passes for one query (StageProfile twin stages)
+    // six cold bigram passes for one query (stage profile: twin stages)
     val st = scoringState(s, d)
     val surrogate = t43From(s, d, st)
       .select(col("doc_id"), col("score_ppm"))

@@ -94,11 +94,11 @@ object Pipelines {
     // (feature explode, counts aggregate, target-lang passthrough, the
     // survivor join), and here that input carries the whole span-cut
     // lineage — token explode, marker window, per-doc text rebuild —
-    // which Catalyst re-evaluates once per consumer (StageProfile r18:
+    // which Catalyst re-evaluates once per consumer (r18 stage profile:
     // two ~19 s twin stages + a 3× union read on the cold path).
     // Materializing the cut+quality survivors ONCE is bit-identical
     // (same rows feed every consumer) and turns the four cut passes
-    // into one: QueryTime 5.62 s → ~2.8 s. The sized checkpoint below
+    // into one: 5.62 s → ~2.8 s wall. The sized checkpoint below
     // keeps its own role (dedup output feeding the prefix sum's two
     // consumers).
     val quality = cleaned

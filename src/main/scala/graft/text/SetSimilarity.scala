@@ -75,7 +75,7 @@ object SetSimilarity {
   private[graft] def hashedSets(docs: DataFrame): DataFrame =
     // shingling + hashing are interpreted HOFs running in the scan
     // stage — spread a narrow (single-split) tier across the cores
-    // first (r18, [[graft.ops.Spread]]; StageProfile: the whole build
+    // first (r18, [[graft.ops.Spread]]; stage profile: the whole build
     // in ONE 0.5 s task at sf0.1); identity at scale
     shingleSets(graft.ops.Spread.ifNarrow(docs, col("doc_id")))
       .select(col("doc_id"),

@@ -1106,7 +1106,7 @@ object TextAnalysis {
       concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")), merges)
     // the merge-chain encode is a multiplying kernel in the scan
     // stage — spread a narrow input across the cores first (r18,
-    // [[graft.ops.Spread]]; StageProfile: the whole corpus encoded in
+    // [[graft.ops.Spread]]; stage profile: the whole corpus encoded in
     // ONE task off a single-split tier). Keying by doc_id also
     // pre-satisfies the rebuild groupBy's clustering, so the spread
     // replaces that exchange rather than adding one.
@@ -1165,7 +1165,7 @@ object TextAnalysis {
     * coAdj getOrElse posture): t44's cutSpansMaximal consumes the
     * stream four times (occurrence digest, run-hash join, token
     * explode, n_tokens), and without the materialization each
-    * consumer re-ran the full corpus encode — StageProfile r18 shows
+    * consumer re-ran the full corpus encode — the r18 stage profile shows
     * twin 1.4 s encode stages on the cold path. The served branch
     * stays a plain scan so its doc_id bucket layout keeps feeding the
     * per-doc windows and joins exchange-free.

@@ -57,7 +57,7 @@ object Winnowing {
     // gram digests via the native graft_ngram_md5 kernel (r18): the
     // transform/slice/concat_ws/md5 SQL chain it replaces is an
     // array-HOF CodegenFallback — the ngo builder measured it 8.85×
-    // slower (NGO_KERNEL_R15.json) and the r18 StageProfile read the
+    // slower (NGO_KERNEL_R15.json) and the r18 stage profile read the
     // whole t38 gram+window kernel in ONE task at sf0.1. Bit-equality
     // of kernel vs chain is spec-pinned (WinnowingSpec); h keeps the
     // portable first-8-hex-chars contract (conv is case-insensitive,

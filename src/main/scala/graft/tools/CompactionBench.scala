@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The compaction-policy curve (r13 verdict #5): how does probe cost
@@ -27,17 +26,10 @@ object CompactionBench {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val appends = if (args.length > 1) args(1).toInt else 12
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.SparkEntry.localSession()
       .config("spark.sql.warehouse.dir", "/tmp/graft_compact_wh")
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=/tmp/graft_compact_db;create=true")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

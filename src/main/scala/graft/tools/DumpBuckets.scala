@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for the cross-engine LSH-ladder check: dumps the Spark-side
   * bucket index (vec_id, tbl, bk) for a corpus dir as parquet, plus the
@@ -19,14 +18,7 @@ object DumpBuckets {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val out = if (args.length > 1) args(1) else "/tmp/ladder_check"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sim.Similarity.bucketTable(spark, dir)
       .write.mode("overwrite").parquet(s"$out/spark_buckets.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-increment maintenance cost of the persisted index tables
@@ -49,17 +48,10 @@ object IncrementBench {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_sf1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.SparkEntry.localSession()
       .config("spark.sql.warehouse.dir", "/tmp/graft_increment_wh")
       .config("javax.jdo.option.ConnectionURL",
         "jdbc:derby:;databaseName=/tmp/graft_increment_db;create=true")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

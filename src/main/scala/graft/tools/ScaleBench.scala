@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale validation for the heavy families (r6 verdict #1): times each
   * heavy query at the base tier (sf0.1) and the [[ScaleUp]]-generated
   * scaled tier (sf1 = 10×) under Bench's methodology (sf0.01 warmup,
@@ -12,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * doubling is timer noise, not a scaling law).
   *
   * Besides wall time it tallies SHUFFLE BYTES (read+written) per run
-  * via a stage listener and reports their exponent too: bytes are a
+  * via [[graft.Bench.Tally]] and reports their exponent too: bytes are a
   * pure function of the plan and the data — immune to the co-tenant
   * timing drift that has flagged every round's bench — so `bexp` is
   * the noise-free scaling law and `exp` the observed cost. A
@@ -24,41 +22,6 @@ import org.apache.spark.sql.SparkSession
   * Results land in SCALE_SELF.json (full record; stdout may truncate).
   */
 object ScaleBench {
-
-  /** Accumulates shuffle bytes across completed stages. Spark delivers
-    * stage events asynchronously, so reads go through [[quiesce]].
-    * Shared with [[StreamScale]] (same methodology on streaming runs).
-    */
-  private[tools] final class ShuffleTally
-      extends org.apache.spark.scheduler.SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def snapshot: Long = read.get() + write.get()
-  }
-
-  /** Wait until no job is active, then give the listener bus a short
-    * drain window — bounds the event bleed between measured runs.
-    */
-  private[tools] def quiesce(spark: SparkSession): Unit = {
-    val tracker = spark.sparkContext.statusTracker
-    while (tracker.getActiveJobIds().nonEmpty) Thread.sleep(20)
-    // release prior runs' shuffle/checkpoint files NOW (outside any
-    // timer): the ContextCleaner deletes them only when their
-    // dependencies get GC'd, and a large measurement heap can go many
-    // runs between collections — at the 100x g2 tier the accumulated
-    // spill of 8 interleaved runs filled the disk before any single
-    // run's working set would have (r10).
-    System.gc()
-    Thread.sleep(150)
-  }
 
   /** The expensive families named by the r6 verdict. */
   val heavy: Seq[String] = Seq(
@@ -90,7 +53,6 @@ object ScaleBench {
     val names = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(heavy)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_NO_BROADCAST=1 disables broadcast joins on BOTH
     // planner paths (static + AQE): separates a broadcast→shuffle
     // THRESHOLD TRANSITION (bytes jump once when a build side outgrows
@@ -98,15 +60,8 @@ object ScaleBench {
     // with broadcasts off, both tiers pay the shuffle form and the
     // exponent reads the law directly.
     val noBcast = sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.cleaner.periodicGC.interval", "2min") // see quiesce
-      .config("spark.ui.enabled", "false")
+    val builder = graft.SparkEntry.localSession()
+      .config("spark.cleaner.periodicGC.interval", "2min") // see Bench.quiesce
     if (noBcast) {
       builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
       builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -114,19 +69,19 @@ object ScaleBench {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val tally = new ShuffleTally
+    val tally = new graft.Bench.Tally
     spark.sparkContext.addSparkListener(tally)
 
     // returns (seconds, shuffle bytes read+written by this run)
     def runNoop(name: String, dir: String): (Double, Long) = {
-      quiesce(spark)
-      val bytes0 = tally.snapshot
+      graft.Bench.quiesce(spark)
+      val bytes0 = tally.counts.shuffleBytes
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      quiesce(spark)
-      (sec, tally.snapshot - bytes0)
+      graft.Bench.quiesce(spark)
+      (sec, tally.counts.shuffleBytes - bytes0)
     }
 
     // JIT/codegen warmup on the small tier, same as Bench

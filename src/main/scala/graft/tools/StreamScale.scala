@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Scale rows for the STREAMING family (r9 verdict #7): st1/st3 had
@@ -27,18 +27,10 @@ object StreamScale {
     val scaled = if (args.length > 1) args(1) else "/tmp/graft_sf10"
     val factor = if (args.length > 2) args(2).toInt else 10
     val passes = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val tally = new ScaleBench.ShuffleTally
+    val tally = new graft.Bench.Tally
     spark.sparkContext.addSparkListener(tally)
 
     def stream(name: String, dir: String): DataFrame = {
@@ -74,9 +66,9 @@ object StreamScale {
     }
 
     def runOnce(name: String, dir: String): (Double, Long) = {
-      ScaleBench.quiesce(spark)
+      graft.Bench.quiesce(spark)
       val ckpt = java.nio.file.Files.createTempDirectory("ss_ckpt")
-      val bytes0 = tally.snapshot
+      val bytes0 = tally.counts.shuffleBytes
       val t0 = System.nanoTime()
       val q = stream(name, dir).writeStream
         .format("noop").outputMode("append")
@@ -85,7 +77,7 @@ object StreamScale {
         .start()
       q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
-      ScaleBench.quiesce(spark)
+      graft.Bench.quiesce(spark)
       // drop the checkpoint's state/offset tree NOW (ADVICE r10: passes
       // × queries × tiers of leaked large-tier state files can fill
       // /tmp — the same disk-exhaustion mode the ScaleBench quiesce fix
@@ -96,7 +88,7 @@ object StreamScale {
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
         finally walk.close()
       } catch { case _: Throwable => () }
-      (sec, tally.snapshot - bytes0)
+      (sec, tally.counts.shuffleBytes - bytes0)
     }
 
     // JIT warmup on the base tier (discarded): the streaming file

@@ -123,24 +123,26 @@ class B3PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("ups").toString + "/t"
     // first upsert into a non-existent path just writes the increment
-    Lake.upsertByKey(spark,
+    Lake.upsertByKeyGuarded(spark,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), dir, "k")
     // update key 2, insert key 4, leave 1 and 3 alone
     val inc = Seq((2L, "B"), (4L, "D")).toDF("k", "v")
-    Lake.upsertByKey(spark, inc, dir, "k")
+    Lake.upsertByKeyGuarded(spark, inc, dir, "k")
     def state() = spark.read.parquet(dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(state() == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
     // re-applying the same increment is a no-op (at-least-once upstream)
-    Lake.upsertByKey(spark, inc, dir, "k")
+    Lake.upsertByKeyGuarded(spark, inc, dir, "k")
     assert(state() == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
     // the rename-aside swap cleaned up both working directories
     assert(!new java.io.File(dir.stripSuffix("/") + "_upserting").exists)
     assert(!new java.io.File(dir.stripSuffix("/") + "_old").exists)
+    // and the commit's write-ahead intent is cleared
+    assert(!new java.io.File(dir.stripSuffix("/") + "_intent").exists)
     // the key-unique contract is ENFORCED, and rejection leaves the
     // table untouched (r5 verdict #5: dup keys used to land twice)
     val err = intercept[IllegalArgumentException] {
-      Lake.upsertByKey(spark, Seq((5L, "x"), (5L, "y")).toDF("k", "v"), dir, "k")
+      Lake.upsertByKeyGuarded(spark, Seq((5L, "x"), (5L, "y")).toDF("k", "v"), dir, "k")
     }
     assert(err.getMessage.contains("duplicate key"))
     assert(state() == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
